@@ -137,7 +137,7 @@ object Bench {
     * the JSON head (r3-r5 artifacts arrived unparseable). So stdout
     * carries a bounded HEADLINE subset — every LLM-pipeline family
     * plus representative batch queries — while the complete 4-decimal
-    * map goes to bench_full.json (committed per round, the
+    * map goes to the [[artifactFile]] (committed per round, the
     * round-over-round comparison artifact).
     */
   private val headlinePrefixes = Seq("ann_", "dedup_", "curate_",
@@ -424,6 +424,17 @@ object Bench {
     (confirmed.sorted, transient.sorted)
   }
 
+  /** The full-map artifact a run at `sfDir` writes and reads its
+    * `prev` from: the sf0.1 record keeps `bench_full.json`; any other
+    * data dir gets `bench_<dir basename>.json`, so a scale run can
+    * never overwrite the sf0.1 record (or compare against it).
+    */
+  private[graft] def artifactFile(sfDir: String): String =
+    java.nio.file.Paths.get(sfDir).getFileName.toString match {
+      case "sf0.1" => "bench_full.json"
+      case base => s"bench_$base.json"
+    }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
@@ -551,15 +562,16 @@ object Bench {
       if (only.isDefined) 0.0
       else try streamBenchStateful(spark) catch { case _: Throwable => -1.0 }
     // Round-over-round trend in ONE artifact (r10 VERDICT item 8): the
-    // per-query map of the bench_full.json being REPLACED rides the
+    // per-query map of the artifact being REPLACED rides the
     // new file as "prev", so a regression diff reads off a single
     // artifact instead of two git revisions. Jackson is already on the
     // Spark classpath; any read/parse failure degrades to {} — the
     // trend field must never cost a run its result.
     val host = try java.net.InetAddress.getLocalHost.getHostName
       catch { case _: Throwable => "unknown" }
+    val artifact = artifactFile(sfDir)
     val (prevJson, prevMap, prevSf, prevHist, prevParHist) = try {
-      val p = java.nio.file.Paths.get("bench_full.json")
+      val p = java.nio.file.Paths.get(artifact)
       if (java.nio.file.Files.exists(p)) {
         val om = new com.fasterxml.jackson.databind.ObjectMapper()
         val root = om.readTree(java.nio.file.Files.readAllBytes(p))
@@ -638,14 +650,14 @@ object Bench {
     val hnswBuildJson =
       if (hnswBuildSec < 0) "null" else fmt(hnswBuildSec, 4)
     def line(qs: String, extra: String = "") =
-      s"""{"metric":"total","value":${fmt(total, 4)},"total_nonquadratic":${fmt(totalNonQuadratic, 4)},"quadratic_lanes":$quadraticJson,"hnsw_build_sec":$hnswBuildJson,"unit":"sec","nq":${results.size},"queries":$qs,"failed":$failedJson,"regressed":$regressedJson,"transient":$transientJson,"median_shift":${fmt(shift, 3)},"stream_rows_per_sec":${fmt(streamRps, 0)},"stream_rows_per_sec_stateful":${fmt(streamRpsStateful, 0)},"loadavg":${fmt(loadavg, 2)},"probe_ms":${fmt(probeMs, 1)},"probe_quiet_ms":${fmt(probeQuiet, 1)},"probe_par_ms":${fmt(probeParMs, 1)},"probe_par_quiet_ms":${fmt(probeParQuiet, 1)},"noisy":$noisy,"full":"bench_full.json","sf":"$sfDir"$extra}"""
+      s"""{"metric":"total","value":${fmt(total, 4)},"total_nonquadratic":${fmt(totalNonQuadratic, 4)},"quadratic_lanes":$quadraticJson,"hnsw_build_sec":$hnswBuildJson,"unit":"sec","nq":${results.size},"queries":$qs,"failed":$failedJson,"regressed":$regressedJson,"transient":$transientJson,"median_shift":${fmt(shift, 3)},"stream_rows_per_sec":${fmt(streamRps, 0)},"stream_rows_per_sec_stateful":${fmt(streamRpsStateful, 0)},"loadavg":${fmt(loadavg, 2)},"probe_ms":${fmt(probeMs, 1)},"probe_quiet_ms":${fmt(probeQuiet, 1)},"probe_par_ms":${fmt(probeParMs, 1)},"probe_par_quiet_ms":${fmt(probeParQuiet, 1)},"noisy":$noisy,"full":"$artifact","sf":"$sfDir"$extra}"""
     // Full map (4-decimal) to the file artifact; headline map
     // (3-decimal) to stdout, with a hard 1600-char guard: should
     // the headline set ever outgrow the tail budget, drop precision
     // rather than ship another unparseable round.
     val fullLine = line(queriesJson(results, 4),
       s""","probe_host":"$host","probe_ver":$ProbeVersion,"probe_hist":${histJson(probeHist)},"probe_par_hist":${histJson(probeParHist)},"prev":$prevJson""")
-    try java.nio.file.Files.write(java.nio.file.Paths.get("bench_full.json"),
+    try java.nio.file.Files.write(java.nio.file.Paths.get(artifact),
       (fullLine + "\n").getBytes("UTF-8"))
     catch { case _: Throwable => () }
     val headline = results.filter(r => isHeadline(r._1))

@@ -419,20 +419,8 @@ object Bpe {
           "vocab) or raise maxVocabRows if the driver heap genuinely " +
           "holds it.")
       m.collect().map(r => (r.getString(0), r.getLong(1)))
-    } finally unpersistCheckpointed(m)
+    } finally Par.unpersistCheckpointed(m)
   }
-
-  /** Unpersist the checkpointed RDD under a localCheckpointed frame
-    * once its blocks are fully consumed (the Hnsw convention — a
-    * localCheckpoint cannot recompute, so only call after the last
-    * action over the frame).
-    */
-  private[graft] def unpersistCheckpointed(df: DataFrame): Unit =
-    df.queryExecution.analyzed.foreach {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        l.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
 
   /** Left-to-right non-overlapping single-pass merge — the exact
     * semantics the SEP-prefixed string `replace` reproduces (on

@@ -156,7 +156,7 @@ object Hnsw {
 
   /** [[buildGraph]] plus the layer-membership checkpoint it rides on,
     * so callers that eagerly materialize the adjacency can unpersist
-    * the membership blocks immediately ([[unpersistCheckpointed]]).
+    * the membership blocks immediately ([[Par.unpersistCheckpointed]]).
     */
   private def buildGraphWithMem(e: DataFrame,
       dims0: Int = -1): (DataFrame, DataFrame) = {
@@ -190,18 +190,16 @@ object Hnsw {
     // plane dots in one projection), and plane tables are salted per
     // (layer, table) so layers bucket independently
     val bucketed = (0 to MaxLayer).map { l =>
-      mem.filter(col("layer") === l)
-        .select(col("layer"), col("vec_id"), col("embedding"),
-          posexplode(array((0 until Tables).map(t =>
-            Similarity.bucketCol(dims, planesOf(l), l * Tables + t)): _*)))
-        .withColumnRenamed("pos", "tbl").withColumnRenamed("col", "__bkt")
+      Similarity.bucketRows(mem.filter(col("layer") === l), dims,
+        planesOf(l), Tables, l * Tables)(
+        col("layer"), col("vec_id"), col("embedding"))
     }.reduce(_ unionByName _)
-    val left = bucketed.select(col("layer"), col("tbl"), col("__bkt"),
+    val left = bucketed.select(col("layer"), col("tbl"), col("bucket"),
       col("vec_id").as("src"), col("embedding").as("se"))
-      .repartition(col("layer"), col("tbl"), col("__bkt"))
-    val right = bucketed.select(col("layer"), col("tbl"), col("__bkt"),
+      .repartition(col("layer"), col("tbl"), col("bucket"))
+    val right = bucketed.select(col("layer"), col("tbl"), col("bucket"),
       col("vec_id").as("dst"), col("embedding").as("de"))
-    val cand = left.join(right, Seq("layer", "tbl", "__bkt"))
+    val cand = left.join(right, Seq("layer", "tbl", "bucket"))
       .filter(col("src") =!= col("dst"))
       .select(col("layer"), col("src"), col("se"), col("dst"), col("de"))
     val ring = ringEdges(mem)
@@ -350,18 +348,6 @@ object Hnsw {
     frontier.toSeq.toDF("query_id", "node", "cos")
   }
 
-  /** Unpersist the checkpointed RDD under a localCheckpointed frame
-    * (its analyzed plan is a LogicalRDD over the persisted RDD). Only
-    * call once the frame's blocks have been fully consumed by an
-    * EAGER successor — a localCheckpoint cannot recompute.
-    */
-  private def unpersistCheckpointed(df: DataFrame): Unit =
-    df.queryExecution.analyzed.foreach {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        l.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
-
   /** Batch ANN search over the layered graph. Returns the
     * annBruteForce shape: (query_id, neighbor_id, rank, cos_sim),
     * top-k of the layer-0 beam, self excluded.
@@ -378,7 +364,7 @@ object Hnsw {
       adj.unpersist(blocking = false)
       // the search's result is eagerly checkpointed and the adjacency
       // cache is dropped — nothing re-reads the membership blocks
-      unpersistCheckpointed(mem)
+      Par.unpersistCheckpointed(mem)
     }
   }
 
@@ -433,7 +419,7 @@ object Hnsw {
         .localCheckpoint(eager = true)
     } finally {
       adj.unpersist(blocking = false)
-      unpersistCheckpointed(mem)
+      Par.unpersistCheckpointed(mem)
     }
   }
 
@@ -494,7 +480,7 @@ object Hnsw {
       // membership blocks under it are dead weight (r17 ADVICE:
       // cachedGraphFor's ck plan holds only the outer LogicalRDD, so
       // releaseGraphCache could never reach them)
-      unpersistCheckpointed(mem)
+      Par.unpersistCheckpointed(mem)
       // name the checkpointed RDD so block ownership is readable in
       // the UI/getPersistentRDDs and spec-assertable after release
       ck.queryExecution.analyzed.foreach {
@@ -522,7 +508,7 @@ object Hnsw {
     while (it.hasNext) {
       val ent = it.next()
       if (ent.getKey._1 eq spark) {
-        unpersistCheckpointed(ent.getValue._1)
+        Par.unpersistCheckpointed(ent.getValue._1)
         it.remove()
       }
     }
@@ -591,13 +577,12 @@ object Hnsw {
       memW.select(col("layer"), col("vec_id"), col("embedding"))
         .repartition(col("layer"))
         .write.mode("overwrite").partitionBy("layer").parquet(s"$path/nodes")
-    } finally unpersistCheckpointed(memW)
+    } finally Par.unpersistCheckpointed(memW)
     val entry = entryPoint(e)
-    e.filter(col("vec_id") === entry)
+    Similarity.writeSmall(e.filter(col("vec_id") === entry)
       .select(col("vec_id").as("entry"),
         col("embedding").cast("array<double>").as("entry_emb"),
-        lit(M).as("m"), lit(MaxLayer).as("max_layer"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
+        lit(M).as("m"), lit(MaxLayer).as("max_layer")), s"$path/meta")
   }
 
   /** Append new vectors into a persisted index WITHOUT a rebuild —
@@ -656,20 +641,18 @@ object Hnsw {
     val bucketed = (0 to MaxLayer).map { l =>
       val planes = appendPlanesFor(exN.get(l).map(_._1).getOrElse(0L),
         newN.getOrElse(l, 0L))
-      union.filter(col("layer") === l)
-        .select(col("layer"), col("vec_id"), col("embedding"), col("__new"),
-          posexplode(array((0 until Tables).map(t =>
-            Similarity.bucketCol(dims, planes, l * Tables + t)): _*)))
-        .withColumnRenamed("pos", "tbl").withColumnRenamed("col", "__bkt")
+      Similarity.bucketRows(union.filter(col("layer") === l), dims,
+        planes, Tables, l * Tables)(
+        col("layer"), col("vec_id"), col("embedding"), col("__new"))
     }.reduce(_ unionByName _)
-    val left = bucketed.select(col("layer"), col("tbl"), col("__bkt"),
+    val left = bucketed.select(col("layer"), col("tbl"), col("bucket"),
       col("vec_id").as("src"), col("embedding").as("se"),
       col("__new").as("srcNew"))
-      .repartition(col("layer"), col("tbl"), col("__bkt"))
-    val right = bucketed.select(col("layer"), col("tbl"), col("__bkt"),
+      .repartition(col("layer"), col("tbl"), col("bucket"))
+    val right = bucketed.select(col("layer"), col("tbl"), col("bucket"),
       col("vec_id").as("dst"), col("embedding").as("de"),
       col("__new").as("dstNew"))
-    val cand = left.join(right, Seq("layer", "tbl", "__bkt"))
+    val cand = left.join(right, Seq("layer", "tbl", "bucket"))
       .filter(col("src") =!= col("dst"))
       .filter(col("srcNew") || col("dstNew"))
       .select(col("layer"), col("src"), col("se"), col("dst"), col("de"),
@@ -783,7 +766,7 @@ object Hnsw {
     probeCaches.compute((spark, path), (_, existing) => {
       if (existing != null && existing.maxEdges >= maxEdges) existing
       else {
-      val meta = spark.read.parquet(s"$path/meta").collect()(0)
+      val meta = Similarity.readMeta(spark, path)
       val adj = spark.read.parquet(s"$path/adj")
       // an index whose WHOLE adjacency fits the edge budget loads
       // entirely at first touch (one job): every later probe is then
@@ -960,17 +943,6 @@ object Hnsw {
         col("embedding").as("de")), Seq("layer", "dst"))
       .withColumn("cos", round(Vectors.cosine(col("se"), col("de")), 6))
       .select(col("layer"), col("src"), col("dst"), col("cos"), col("de"))
-    capped.unionByName(ringE)
-      .groupBy(col("layer"), col("src"), col("dst"))
-      .agg(max(col("cos")).as("cos"), first(col("de")).as("de"))
-      .repartition(col("layer"))
-      .sortWithinPartitions(col("layer"), col("src"))
-      .write.mode("overwrite").partitionBy("layer")
-      .parquet(s"${adjPath}__compact")
-    nodes.repartition(col("layer"))
-      .sortWithinPartitions(col("layer"), col("vec_id"))
-      .write.mode("overwrite").partitionBy("layer")
-      .parquet(s"${nodesPath}__compact")
     // entry point from the full membership — bounded (1-row) collect
     val entryRow = nodes
       .groupBy(col("vec_id"))
@@ -981,11 +953,17 @@ object Hnsw {
       .select(col("vec_id").as("entry"),
         col("emb").cast("array<double>").as("entry_emb"),
         lit(M).as("m"), lit(MaxLayer).as("max_layer"))
-    entryRow.coalesce(1).write.mode("overwrite")
-      .parquet(s"$path/meta__compact")
-    IndexIo.swapInto(spark, s"${adjPath}__compact", adjPath)
-    IndexIo.swapInto(spark, s"${nodesPath}__compact", nodesPath)
-    IndexIo.swapInto(spark, s"$path/meta__compact", s"$path/meta")
+    IndexIo.rewrite(spark, "compact",
+      adjPath -> (side => capped.unionByName(ringE)
+        .groupBy(col("layer"), col("src"), col("dst"))
+        .agg(max(col("cos")).as("cos"), first(col("de")).as("de"))
+        .repartition(col("layer"))
+        .sortWithinPartitions(col("layer"), col("src"))
+        .write.mode("overwrite").partitionBy("layer").parquet(side)),
+      nodesPath -> (side => nodes.repartition(col("layer"))
+        .sortWithinPartitions(col("layer"), col("vec_id"))
+        .write.mode("overwrite").partitionBy("layer").parquet(side)),
+      s"$path/meta" -> (side => Similarity.writeSmall(entryRow, side)))
   }
 
   /** The distributed twin of [[hnswIndexProbe]] — the same descent
@@ -997,7 +975,7 @@ object Hnsw {
       query: Seq[Double], k: Int = 5,
       excludeId: Option[Long] = None): DataFrame = {
     import spark.implicits._
-    val meta = spark.read.parquet(s"$path/meta").collect()(0)
+    val meta = Similarity.readMeta(spark, path)
     val entry = meta.getAs[Long]("entry")
     val entryEmb = meta.getSeq[Double](meta.fieldIndex("entry_emb"))
     val adj = spark.read.parquet(s"$path/adj")
@@ -1005,9 +983,8 @@ object Hnsw {
     val qn = math.sqrt(query.map(x => x * x).sum)
     val cos0 = cosDriver(query, qn, entryEmb)
     val frontier0 = Seq((0L, entry, cos0)).toDF("query_id", "node", "cos")
-    val frontier = descend(adj, queries, frontier0)
-    excludeId.fold(frontier)(id => frontier.filter(col("node") =!= id))
-      .orderBy(col("cos").desc, col("node")).limit(k)
-      .select(col("node").as("neighbor_id"), col("cos").as("cos_sim"))
+    Similarity.probeTail(descend(adj, queries, frontier0)
+      .select(col("node").as("neighbor_id"), col("cos").as("cos_sim")),
+      k, excludeId)
   }
 }

@@ -13,12 +13,23 @@ import org.apache.spark.sql.SparkSession
   */
 private[graft] object IndexIo {
 
+  /** Rewrite index tables: each `(live, write)` writes its next
+    * generation into the side directory `live__tag` it is handed, then
+    * every table swaps in, in the given order, once all are written.
+    */
+  def rewrite(spark: SparkSession, tag: String,
+      tables: (String, String => Unit)*): Unit = {
+    tables.foreach { case (live, write) => write(s"${live}__$tag") }
+    tables.foreach { case (live, _) =>
+      swapInto(spark, s"${live}__$tag", live) }
+  }
+
   /** Replace `live` with `next`. Not atomic across the two renames —
     * a reader racing the swap can see the old or the new generation,
     * never a half-written one (the side dir was fully written before
     * the first rename).
     */
-  def swapInto(spark: SparkSession, next: String, live: String): Unit = {
+  private def swapInto(spark: SparkSession, next: String, live: String): Unit = {
     val conf = spark.sessionState.newHadoopConf()
     val livePath = new org.apache.hadoop.fs.Path(live)
     val fs = livePath.getFileSystem(conf)

@@ -32,18 +32,8 @@ object Similarity {
     annBruteForce(Tables.embeddings(spark, dir))
 
   def annBruteForce(e: DataFrame,
-      nQueries: Int = 10, k: Int = 5): DataFrame = {
-    val q = broadcast(e.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe")))
-    val scored = e.join(q, col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        round(Vectors.cosine(col("qe"), col("embedding")), 6).as("cos_sim"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"), col("cos_sim"))
-  }
+      nQueries: Int = 10, k: Int = 5): DataFrame =
+    annBruteForceFiltered(e, lit(true), nQueries, k)
 
   /** Brute-force twin for FILTERED search: exact top-k among corpus
     * vectors satisfying `pred`, queries drawn from the FULL corpus —
@@ -57,12 +47,128 @@ object Similarity {
     val scored = e.where(pred).join(q, col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         round(Vectors.cosine(col("qe"), col("embedding")), 6).as("cos_sim"))
+    topKPerQuery(scored, "cos_sim", k)
+  }
+
+  // ---------------------------------------------------------------
+  // Shared ANN machinery: every family's search, probe and index-file
+  // step that is not the family's own train/encode/score code
+  // ---------------------------------------------------------------
+
+  /** Per-query top-k by (score desc, neighbor_id) over a scored frame
+    * (query_id, neighbor_id, `score`) — the result shape of every
+    * in-memory search: (query_id, neighbor_id, rank, `score`).
+    */
+  private def topKPerQuery(scored: DataFrame, score: String,
+      k: Int): DataFrame = {
     val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("neighbor_id"))
+      .orderBy(col(score).desc, col("neighbor_id"))
     scored.withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"), col("cos_sim"))
+      .select(col("query_id"), col("neighbor_id"), col("rank"), col(score))
   }
+
+  /** The query set vec_id < nQueries as driver-side double vectors,
+    * ordered by id — bounded by nQueries rows.
+    */
+  private def queryVectors(e: DataFrame,
+      nQueries: Int): Seq[(Long, Seq[Double])] =
+    e.filter(col("vec_id") < nQueries)
+      .select(col("vec_id"), col("embedding").cast("array<double>"))
+      .collect()
+      .map(r => (r.getLong(0), r.getSeq[Double](1).toIndexedSeq))
+      .sortBy(_._1).toSeq
+
+  /** The persisted-probe tail over a scored frame (neighbor_id, score):
+    * drop `excludeId`, keep the max(k, rerank) best by (score desc,
+    * neighbor_id) — TakeOrderedAndProject, no window — then either cut
+    * to k or re-score that shortlist exactly against `refineFrom`'s
+    * raw vectors (the refine raw read is the caller's trade; a probe
+    * alone reads only its index).
+    */
+  private[operators] def probeTail(scored: DataFrame, k: Int,
+      excludeId: Option[Long], rerank: Int = 0,
+      refineFrom: Option[DataFrame] = None,
+      query: Seq[Double] = Nil): DataFrame = {
+    val score = scored.columns(1)
+    val short = excludeId
+      .fold(scored)(id => scored.filter(col("neighbor_id") =!= id))
+      .orderBy(col(score).desc, col("neighbor_id"))
+      .limit(math.max(k, rerank))
+    refineFrom match {
+      case None => short.limit(k)
+      case Some(raw) =>
+        raw.select(col("vec_id").as("neighbor_id"), col("embedding"))
+          .join(broadcast(short.select(col("neighbor_id"))),
+            Seq("neighbor_id"))
+          .select(col("neighbor_id"), round(Vectors.cosine(
+            col("embedding"), typedLit(query)), 6).as("cos_sim"))
+          .orderBy(col("cos_sim").desc, col("neighbor_id")).limit(k)
+    }
+  }
+
+  /** The centroid table (list, centroid) collected — bounded by nlist. */
+  private def collectCentroids(df: DataFrame): Array[(Int, Array[Double])] =
+    df.collect().map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
+
+  /** A persisted index's centroid table. */
+  private def readCentroids(spark: SparkSession,
+      path: String): Array[(Int, Array[Double])] =
+    collectCentroids(spark.read.parquet(s"$path/centroids"))
+
+  /** A persisted index's (sub, code, centroid) codebook table. */
+  private def readBooks(spark: SparkSession,
+      path: String): Array[(Int, Int, Array[Double])] =
+    spark.read.parquet(s"$path/codebooks").collect()
+      .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
+
+  /** A persisted index's one-row meta table. */
+  private[operators] def readMeta(spark: SparkSession,
+      path: String): org.apache.spark.sql.Row =
+    spark.read.parquet(s"$path/meta").collect()(0)
+
+  /** (m, ksub) of a codebook: subspace and code counts. */
+  private def bookShape(books: Array[(Int, Int, Array[Double])]): (Int, Int) =
+    (books.map(_._1).max + 1, books.map(_._2).max + 1)
+
+  /** A small driver-built table (centroids, codebooks, meta) as one
+    * overwritten file.
+    */
+  private[operators] def writeSmall(df: DataFrame, dir: String): Unit =
+    df.coalesce(1).write.mode("overwrite").parquet(dir)
+
+  private def writeBooks(spark: SparkSession,
+      books: Array[(Int, Int, Array[Double])], dir: String): Unit =
+    writeSmall(spark.createDataFrame(
+        books.toSeq.map { case (s, i, c) => (s, i, c.toSeq) })
+      .toDF("sub", "code", "centroid"), dir)
+
+  /** `df` projected onto a persisted table's schema — NAMES and TYPES:
+    * parquet readers infer from an arbitrary footer, so writing a
+    * narrower frame would make later reads listing-order-dependent,
+    * and the right names at the WRONG types (array<double> embeddings
+    * into a float corpus, an int vec_id into a long-keyed table) mix
+    * file types in one dataset — reads then fail or flip on footer
+    * order. A caller missing a persisted column fails HERE resolvably.
+    */
+  private def alignTo(df: DataFrame,
+      schema: org.apache.spark.sql.types.StructType): DataFrame =
+    df.select(schema.map(f => col(f.name).cast(f.dataType)): _*)
+
+  /** Append `df` to the persisted table at `dir`, schema-aligned. */
+  private def appendAligned(df: DataFrame, dir: String,
+      partitionBy: String*): Unit =
+    alignTo(df, df.sparkSession.read.parquet(dir).schema)
+      .write.mode("append").partitionBy(partitionBy: _*).parquet(dir)
+
+  /** Sign-LSH rows (`keep`…, tbl, bucket): one per hash table;
+    * `salt` offsets the plane-table seeds.
+    */
+  private[operators] def bucketRows(e: DataFrame, dims: Int, planes: Int,
+      tables: Int, salt: Int = 0)(keep: Column*): DataFrame =
+    e.select(keep :+ posexplode(array((0 until tables).map(t =>
+        bucketCol(dims, planes, salt + t)): _*)): _*)
+      .withColumnRenamed("pos", "tbl").withColumnRenamed("col", "bucket")
 
   /** Embedding-cosine near-duplicate pairs (cos >= tau, id_a < id_b).
     *
@@ -174,11 +280,8 @@ object Similarity {
       planes: Int = 8, tables: Int = 16, dims0: Int = -1): DataFrame = {
     val e = emb.select(col("vec_id"), col("embedding"),
       Vectors.norm2(col("embedding")).as("nrm"))
-    val dims = dimsOf(e, dims0)
-    val buckets = (0 until tables).map(t => bucketCol(dims, planes, t))
-    val sk = e.select(col("vec_id"), col("embedding"), col("nrm"),
-      posexplode(array(buckets: _*)))
-      .withColumnRenamed("pos", "tbl").withColumnRenamed("col", "bucket")
+    val sk = bucketRows(e, dimsOf(e, dims0), planes, tables)(
+      col("vec_id"), col("embedding"), col("nrm"))
     val x = sk.select(col("vec_id").as("id_a"), col("embedding").as("ea"),
       col("nrm").as("na"), col("tbl"), col("bucket"))
     val y = sk.select(col("vec_id").as("id_b"), col("embedding").as("eb"),
@@ -294,8 +397,7 @@ object Similarity {
     val theta = math.acos(tau)
     val eps = 1e-5
     val e = emb.select(col("vec_id"), col("embedding"))
-    val cArr = ivfTrain(e, nlist, dims0 = dims0).collect()
-      .map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
+    val cArr = collectCentroids(ivfTrain(e, nlist, dims0 = dims0))
     val cn: Map[Int, Array[Double]] = cArr.map { case (i, c) =>
       val n = math.sqrt(c.map(x => x * x).sum)
       (i, if (n == 0) c else c.map(_ / n))
@@ -511,7 +613,6 @@ object Similarity {
     */
   def ivfTrain(e: DataFrame, nlist: Int = 16, iters: Int = 3,
       dims0: Int = -1, trainPerList: Int = 256): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     // Lloyd iterations re-scan the corpus iters+1 times: cache it for
     // the duration (MEMORY_AND_DISK — spills, never recomputes the
     // upstream lineage per iteration).
@@ -643,7 +744,7 @@ object Similarity {
   private def centsCube(books: Array[(Int, Int, Array[Double])],
       m: Int): Array[Array[Array[Double]]] = {
     require(books.nonEmpty, "pq: empty codebook")
-    val k = books.map(_._2).max + 1
+    val k = bookShape(books)._2
     val cube = Array.fill(m)(Array.ofDim[Array[Double]](k))
     books.foreach { case (s, i, c) => cube(s)(i) = c }
     (0 until m).foreach(s => require(cube(s).exists(_ != null),
@@ -708,7 +809,7 @@ object Similarity {
   def pqEncode(e: DataFrame, books: Array[(Int, Int, Array[Double])],
       dims0: Int = -1): DataFrame = {
     val dims = dimsOf(e, dims0)
-    val m = books.map(_._1).max + 1
+    val m = bookShape(books)._1
     val dsub = dims / m
     val ed = col("embedding").cast("array<double>")
     val cube = centsCube(books, m)
@@ -796,7 +897,7 @@ object Similarity {
   def annPqSearch(e: DataFrame, nQueries: Int = 10, k: Int = 5,
       m: Int = 16, ksub: Int = 64, rerank: Int = 50,
       dims0: Int = -1): DataFrame =
-    annPqSearchImpl(e, lit(true), nQueries, k, m, ksub, rerank, dims0)
+    annPqSearchFiltered(e, lit(true), nQueries, k, m, ksub, rerank, dims0)
 
   /** FILTERED PQ search (the retrieval-pipeline shape, PQ flavor):
     * exact top-k among pred-passing vectors, ADC-scored then
@@ -812,12 +913,7 @@ object Similarity {
     */
   def annPqSearchFiltered(e: DataFrame, pred: Column,
       nQueries: Int = 10, k: Int = 5, m: Int = 16, ksub: Int = 64,
-      rerank: Int = 50, dims0: Int = -1): DataFrame =
-    annPqSearchImpl(e, pred, nQueries, k, m, ksub, rerank, dims0)
-
-  private def annPqSearchImpl(e: DataFrame, pred: Column,
-      nQueries: Int, k: Int, m: Int, ksub: Int, rerank: Int,
-      dims0: Int): DataFrame = {
+      rerank: Int = 50, dims0: Int = -1): DataFrame = {
     val dims = dimsOf(e, dims0)
     val books = pqTrain(e, m, ksub, dims0 = dims)
     val dsub = dims / m
@@ -828,13 +924,9 @@ object Similarity {
       .select(col("vec_id").as("neighbor_id"), col("codes"))
     // code-norm table cn[s][i] = ||c_{s,i}||² — query-independent
     val cn = bookTable(books, m, ksub)((_, c) => c.map(x => x * x).sum)
-    val qs = e.filter(col("vec_id") < nQueries)
-      .select(col("vec_id"), col("embedding").cast("array<double>"))
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-      .sortBy(_._1)
+    val qs = queryVectors(e, nQueries)
     // per-query dot tables dt[s][i] = q_sub · c_{s,i}
-    val qRows = qs.toSeq.map { case (qid, q) =>
+    val qRows = qs.map { case (qid, q) =>
       (qid, dotTable(books, m, ksub, dsub, q.toIndexedSeq),
         math.sqrt(q.map(x => x * x).sum))
     }
@@ -844,16 +936,9 @@ object Similarity {
     val scored = codes.join(queries, col("neighbor_id") =!= col("query_id"))
       .select(col("query_id"), col("neighbor_id"),
         round(num / (col("qn") * sqrt(den)), 6).as("adc_cos"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc_cos").desc, col("neighbor_id"))
-    val adcTopN = scored
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= math.max(k, rerank))
-    if (rerank <= 0)
-      // adcTopN is already cut at max(k, rerank) = k here
-      adcTopN.select(col("query_id"), col("neighbor_id"), col("rank"),
-        col("adc_cos"))
-    else refineShortlist(e, adcTopN, qs, k)
+    // cut at max(k, rerank) = k when there is no refine
+    val adcTopN = topKPerQuery(scored, "adc_cos", math.max(k, rerank))
+    if (rerank <= 0) adcTopN else refineShortlist(e, adcTopN, qs, k)
   }
 
   /** Exact-refine tail shared by the PQ and IVF-PQ searches (FAISS's
@@ -862,9 +947,8 @@ object Similarity {
     * the query vectors; final rank on true cosine, id tie-break.
     */
   private def refineShortlist(e: DataFrame, adcTopN: DataFrame,
-      qs: Array[(Long, Array[Double])], k: Int): DataFrame = {
-    val qv = broadcast(e.sparkSession.createDataFrame(
-        qs.toSeq.map { case (qid, q) => (qid, q.toSeq) })
+      qs: Seq[(Long, Seq[Double])], k: Int): DataFrame = {
+    val qv = broadcast(e.sparkSession.createDataFrame(qs)
       .toDF("query_id", "qe"))
     val short = broadcast(adcTopN.select(col("query_id"),
       col("neighbor_id")))
@@ -874,12 +958,7 @@ object Similarity {
       .join(qv, Seq("query_id"))
       .select(col("query_id"), col("neighbor_id"),
         round(Vectors.cosine(col("ce"), col("qe")), 6).as("cos_sim"))
-    val w2 = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("neighbor_id"))
-    exact.withColumn("rank", row_number().over(w2).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"),
-        col("cos_sim"))
+    topKPerQuery(exact, "cos_sim", k)
   }
 
   /** Deterministic random orthonormal rotation of the embedding
@@ -978,8 +1057,7 @@ object Similarity {
       targetClusterSize: Int = 2000, dims0: Int = -1): DataFrame = {
     val lists = if (nlist > 0) nlist
       else derivedNlist(e.count(), targetClusterSize)
-    val cents = ivfTrain(e, lists, dims0 = dims0).collect()
-      .map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
+    val cents = collectCentroids(ivfTrain(e, lists, dims0 = dims0))
     val assigned = assignToNearest(Par.ensure(e), cents)
       .select(col("vec_id"), col("embedding"), col("list"),
         Vectors.norm2(col("embedding")).as("nrm"))
@@ -1096,10 +1174,7 @@ object Similarity {
       sampleMod: Long = DriftSampleMod): Unit = {
     val dims = dimsOf(e, dims0)
     val books = pqTrain(e, m, ksub, iters, dims)
-    e.sparkSession.createDataFrame(
-        books.toSeq.map { case (s, i, c) => (s, i, c.toSeq) })
-      .toDF("sub", "code", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/codebooks")
+    writeBooks(e.sparkSession, books, s"$path/codebooks")
     // ensure at the corpus-scale call site; the full-corpus codes
     // write also benefits (numShufflePartitions output files instead
     // of the scan's possibly-1)
@@ -1118,8 +1193,7 @@ object Similarity {
       books: Array[(Int, Int, Array[Double])], dims: Int,
       sampleMod: Long): Unit = {
     val spark = train.sparkSession
-    val m = books.map(_._1).max + 1
-    val ksub = books.map(_._2).max + 1
+    val (m, ksub) = bookShape(books)
     def sampled(mod: Long) =
       pqEncode(Par.ensure(distortionSample(train, mod)), books, dims)
         .agg(count(lit(1)).cast("long"), round(avg(col("distortion")), 4))
@@ -1135,11 +1209,10 @@ object Similarity {
     require(r.getLong(0) > 0,
       "writePqIndex: cannot record a distortion baseline for an " +
         "empty corpus")
-    spark.createDataFrame(Seq(
+    writeSmall(spark.createDataFrame(Seq(
         (m.toLong, ksub.toLong, useMod, r.getLong(0), r.getDouble(1))))
       .toDF("m", "ksub", "sample_mod", "n_train_sampled",
-        "train_mean_distortion")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
+        "train_mean_distortion"), s"$path/meta")
   }
 
   /** Append new vectors to a persisted [[writeIvfIndex]] index
@@ -1149,32 +1222,9 @@ object Similarity {
     * [[appendToLshIndex]]). Centroids drift as the corpus grows;
     * re-train on a rebuild cadence, not per batch.
     */
-  /** The persisted index's centroid table, collected — bounded by
-    * nlist (the same driver-state class everywhere it is used). ONE
-    * definition for append/assign/probe/delta so a layout change to
-    * the centroid parquet cannot reach one path and miss another.
-    */
-  private def readCentroids(spark: SparkSession,
-      path: String): Array[(Int, Array[Double])] =
-    spark.read.parquet(s"$path/centroids").collect()
-      .map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
-
-  def appendToIvfIndex(newVectors: DataFrame, path: String): Unit = {
-    val spark = newVectors.sparkSession
-    val cents = readCentroids(spark, path)
-    // align to the persisted corpus's schema — NAMES and TYPES:
-    // parquet readers infer from an arbitrary footer, so appending a
-    // narrower frame would make later reads listing-order-dependent,
-    // and appending the right names at the WRONG types (array<double>
-    // embeddings into a float corpus, a long label) writes mixed-typed
-    // files into the same partitions — reads then fail or flip on
-    // footer order, the exact failure this guard exists to prevent. A
-    // caller missing a persisted column still fails HERE resolvably.
-    val corpusSchema = spark.read.parquet(s"$path/corpus").schema
-    assignToNearest(newVectors, cents)
-      .select(corpusSchema.map(f => col(f.name).cast(f.dataType)): _*)
-      .write.mode("append").partitionBy("list").parquet(s"$path/corpus")
-  }
+  def appendToIvfIndex(newVectors: DataFrame, path: String): Unit =
+    appendAligned(assignToNearest(newVectors,
+      readCentroids(newVectors.sparkSession, path)), s"$path/corpus", "list")
 
   /** Re-train a persisted IVF index from its CURRENT corpus and
     * re-bucket — the maintenance op [[appendToIvfIndex]]'s contract
@@ -1198,19 +1248,13 @@ object Similarity {
       if (nlist0 > 0) nlist0 else readCentroids(spark, path).length
     val cents = ivfTrain(corpus.select(col("vec_id"), col("embedding")),
       nlist, iters)
-    cents.coalesce(1).write.mode("overwrite")
-      .parquet(s"$path/centroids__retrain")
-    val cArr = cents.collect()
-      .map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
-    val corpusSchema = corpus.schema
-    assignToNearest(corpus.drop("list"), cArr)
-      .select(corpusSchema.map(f => col(f.name).cast(f.dataType)): _*)
-      .repartition(col("list"))
-      .write.mode("overwrite").partitionBy("list")
-      .parquet(s"$path/corpus__retrain")
-    IndexIo.swapInto(spark, s"$path/corpus__retrain", s"$path/corpus")
-    IndexIo.swapInto(spark, s"$path/centroids__retrain",
-      s"$path/centroids")
+    val cArr = collectCentroids(cents)
+    IndexIo.rewrite(spark, "retrain",
+      s"$path/corpus" -> (side =>
+        alignTo(assignToNearest(corpus.drop("list"), cArr), corpus.schema)
+          .repartition(col("list"))
+          .write.mode("overwrite").partitionBy("list").parquet(side)),
+      s"$path/centroids" -> (side => writeSmall(cents, side)))
   }
 
   /** Assign each vector to its nearest centroid from a persisted
@@ -1439,18 +1483,9 @@ object Similarity {
     * moves; `pqCalibration` on a sample is the rebuild trigger.
     */
   def appendToPqIndex(newVectors: DataFrame, path: String,
-      dims0: Int = -1): Unit = {
-    val spark = newVectors.sparkSession
-    val books = spark.read.parquet(s"$path/codebooks")
-      .collect()
-      .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
-    // same name-AND-type alignment as appendToIvfIndex: an int vec_id
-    // appended to a long-keyed codes table would mix parquet types
-    val codesSchema = spark.read.parquet(s"$path/codes").schema
-    pqEncode(newVectors, books, dims0)
-      .select(codesSchema.map(f => col(f.name).cast(f.dataType)): _*)
-      .write.mode("append").parquet(s"$path/codes")
-  }
+      dims0: Int = -1): Unit =
+    appendAligned(pqEncode(newVectors,
+      readBooks(newVectors.sparkSession, path), dims0), s"$path/codes")
 
   /** Re-train a persisted [[writePqIndex]] index's codebooks and
     * re-encode — the rebuild [[appendToPqIndex]]'s drift contract
@@ -1472,12 +1507,11 @@ object Similarity {
   def retrainPqIndex(raw: DataFrame, path: String, m0: Int = -1,
       ksub0: Int = -1, iters: Int = 3, dims0: Int = -1): Unit = {
     val spark = raw.sparkSession
-    val old = spark.read.parquet(s"$path/codebooks").collect()
-      .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
-    val m = if (m0 > 0) m0 else old.map(_._1).max + 1
-    val ksub = if (ksub0 > 0) ksub0 else old.map(_._2).max + 1
-    val codesSchema = spark.read.parquet(s"$path/codes").schema
-    val nCodes = spark.read.parquet(s"$path/codes").count()
+    val (oldM, oldKsub) = bookShape(readBooks(spark, path))
+    val m = if (m0 > 0) m0 else oldM
+    val ksub = if (ksub0 > 0) ksub0 else oldKsub
+    val codes = spark.read.parquet(s"$path/codes")
+    val nCodes = codes.count()
     val nRaw = raw.count()
     require(nRaw == nCodes,
       s"retrainPqIndex: raw frame has $nRaw rows but the index at " +
@@ -1485,25 +1519,18 @@ object Similarity {
         "holds (original ∪ appends), nothing else")
     val dims = dimsOf(raw, dims0)
     val books = pqTrain(raw, m, ksub, iters, dims)
-    spark.createDataFrame(
-        books.toSeq.map { case (s, i, c) => (s, i, c.toSeq) })
-      .toDF("sub", "code", "centroid")
-      .coalesce(1).write.mode("overwrite")
-      .parquet(s"$path/codebooks__retrain")
-    pqEncode(Par.ensure(raw), books, dims)
-      .select(codesSchema.map(f => col(f.name).cast(f.dataType)): _*)
-      .write.mode("overwrite").parquet(s"$path/codes__retrain")
-    IndexIo.swapInto(spark, s"$path/codes__retrain", s"$path/codes")
-    IndexIo.swapInto(spark, s"$path/codebooks__retrain",
-      s"$path/codebooks")
+    IndexIo.rewrite(spark, "retrain",
+      s"$path/codes" -> (side =>
+        alignTo(pqEncode(Par.ensure(raw), books, dims), codes.schema)
+          .write.mode("overwrite").parquet(side)),
+      s"$path/codebooks" -> (side => writeBooks(spark, books, side)))
     // the retrained codebooks define a NEW drift baseline (the meta
     // write is idempotent-overwrite — no side dir needed: a one-row
     // table rewritten after the swap, and a crash between swap and
     // meta leaves a STALE baseline that can only over-recommend
     // retraining, never under)
-    val sampleMod = scala.util.Try(
-        spark.read.parquet(s"$path/meta").collect()(0)
-          .getAs[Long]("sample_mod")).getOrElse(DriftSampleMod)
+    val sampleMod = scala.util.Try(readMeta(spark, path)
+      .getAs[Long]("sample_mod")).getOrElse(DriftSampleMod)
     writePqMeta(raw, path, books, dims, sampleMod)
   }
 
@@ -1567,9 +1594,8 @@ object Similarity {
   def pqDriftReport(current: DataFrame, path: String,
       threshold: Double = 1.25, dims0: Int = -1): DataFrame = {
     val spark = current.sparkSession
-    val books = spark.read.parquet(s"$path/codebooks").collect()
-      .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
-    val meta = spark.read.parquet(s"$path/meta").collect()(0)
+    val books = readBooks(spark, path)
+    val meta = readMeta(spark, path)
     val dims = dimsOf(current, dims0)
     val cur = pqEncode(Par.ensure(distortionSample(current,
       meta.getAs[Long]("sample_mod"))), books, dims)
@@ -1628,9 +1654,8 @@ object Similarity {
       threshold: Double = 1.25, dims0: Int = -1): DataFrame = {
     val spark = current.sparkSession
     val cents = readCentroids(spark, path)
-    val books = spark.read.parquet(s"$path/codebooks").collect()
-      .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
-    val meta = spark.read.parquet(s"$path/meta").collect()(0)
+    val books = readBooks(spark, path)
+    val meta = readMeta(spark, path)
     val dims = dimsOf(current, dims0)
     val sampled = distortionSample(current, meta.getAs[Long]("sample_mod"))
     val res = residualFrame(assignToNearest(Par.ensure(sampled), cents),
@@ -1659,84 +1684,67 @@ object Similarity {
       k: Int = 5, rerank: Int = 0, refineFrom: Option[DataFrame] = None,
       excludeId: Option[Long] = None,
       pred: Column = lit(true)): DataFrame = {
-    val books = spark.read.parquet(s"$path/codebooks").collect()
-      .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
-    val m = books.map(_._1).max + 1
-    val ksub = books.map(_._2).max + 1
-    // dims come from the INDEX (every stored centroid is one subspace
-    // slice), not from the query: a mis-sized query must fail here
-    // with a resolvable message, not throw IndexOutOfBounds deep in
-    // the dot tables or silently truncate trailing dims
-    val dsub = books.head._3.length
-    require(query.length == m * dsub,
-      s"pqIndexProbe: query has ${query.length} dims but the index at " +
-        s"$path was trained on ${m * dsub} (m=$m subspaces × dsub=$dsub)")
+    val (books, m, ksub, dsub) = probeBooks(spark, path, query)
     val dt = typedLit(dotTable(books, m, ksub, dsub, query.toIndexedSeq))
     val cn = typedLit(bookTable(books, m, ksub)((_, c) =>
       c.map(x => x * x).sum))
     val qn = math.sqrt(query.map(x => x * x).sum)
     val (num, den) = adcSums(dt, cn, m)
-    val base = spark.read.parquet(s"$path/codes").where(pred)
-    val scored = excludeId.fold(base)(id => base.filter(col("vec_id") =!= id))
+    probeTail(spark.read.parquet(s"$path/codes").where(pred)
       .select(col("vec_id").as("neighbor_id"),
-        round(num / (lit(qn) * sqrt(den)), 6).as("adc_cos"))
-    val short = scored
-      .orderBy(col("adc_cos").desc, col("neighbor_id"))
-      .limit(math.max(k, rerank))
-    refineFrom match {
-      case None => short.limit(k)
-      case Some(raw) =>
-        val q = typedLit(query)
-        raw.select(col("vec_id").as("neighbor_id"), col("embedding"))
-          .join(broadcast(short.select(col("neighbor_id"))),
-            Seq("neighbor_id"))
-          .select(col("neighbor_id"),
-            round(Vectors.cosine(col("embedding"), q), 6).as("cos_sim"))
-          .orderBy(col("cos_sim").desc, col("neighbor_id")).limit(k)
-    }
+        round(num / (lit(qn) * sqrt(den)), 6).as("adc_cos")),
+      k, excludeId, rerank, refineFrom, query)
   }
 
-  /** Driver-side probe-list RANKING over the bounded centroid table —
-    * top-nprobe by cosine with (−cos, list) ties (the LOWER list, the
-    * assignment's side). ONE definition shared by the IVF and IVF-PQ
-    * probe paths (and the composite's in-memory query loop) so a
-    * tie-break or guard change cannot reach one family and miss
-    * another — the refineShortlist/signaturePairs extraction rule
-    * applied here too.
+  /** A persisted PQ/IVF-PQ index's codebooks with their (m, ksub,
+    * dsub). dims come from the INDEX (every stored centroid is one
+    * subspace slice), not from the query: a mis-sized query must fail
+    * here with a resolvable message, not throw IndexOutOfBounds deep
+    * in the dot tables or silently truncate trailing dims.
     */
-  private def rankedProbeLists(cents: Array[(Int, Array[Double])],
-      query: Seq[Double], nprobe: Int): Seq[Int] = {
-    val qn = math.sqrt(query.map(x => x * x).sum)
-    cents.map { case (i, c) =>
-      val cNorm = math.sqrt(c.map(x => x * x).sum)
-      (i, c.indices.map(d => c(d) * query(d)).sum / (cNorm * qn))
-    }.sortBy { case (list, cos) => (-cos, list) }
-      .take(nprobe).map(_._1).toSeq
+  private def probeBooks(spark: SparkSession, path: String,
+      query: Seq[Double]): (Array[(Int, Int, Array[Double])], Int, Int, Int) = {
+    val books = readBooks(spark, path)
+    val (m, ksub) = bookShape(books)
+    val dsub = books.head._3.length
+    require(query.length == m * dsub,
+      s"index probe: query has ${query.length} dims but the index at " +
+        s"$path was trained on ${m * dsub} (m=$m subspaces × dsub=$dsub)")
+    (books, m, ksub, dsub)
   }
 
-  /** The query's own TWO-LEVEL stored list (hier regime only; empty
-    * below [[HierAssignThreshold]]): large indexes were WRITTEN with
-    * two-level assignment, where a vector's stored list can differ
-    * from its exact-nearest centroid — probing the query's own list
-    * (computed by the same deterministic [[assignToNearest]]) means
-    * an indexed twin of the query is never missed by the exact
-    * ranking alone.
+  /** The lists each query probes, chosen driver-side over the bounded
+    * centroid table — ONE definition for the in-memory IVF and IVF-PQ
+    * searches and both persisted probes. Ranking: top-nprobe by cosine,
+    * (−cos, list) ties breaking to the LOWER list — the side
+    * [[assignToNearest]]'s argmin takes, so in the flat regime a
+    * query's own list is always among its probes even when two
+    * centroids tie. At or above [[HierAssignThreshold]] storage
+    * assignment is TWO-LEVEL and a vector's stored list can differ
+    * from its exact-nearest centroid, so each query's own stored list
+    * (the same deterministic [[assignToNearest]], one job for the whole
+    * query set) joins its probes: an indexed twin of the query is never
+    * missed by the exact ranking alone. Lists are distinct per query.
     */
-  private def assignedListOf(spark: SparkSession,
-      cents: Array[(Int, Array[Double])],
-      query: Seq[Double]): Seq[Int] =
-    if (cents.length < HierAssignThreshold) Seq.empty
-    else {
-      import scala.jdk.CollectionConverters._
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("embedding",
-          org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.DoubleType))))
-      val one = spark.createDataFrame(
-        Seq(org.apache.spark.sql.Row(query)).asJava, schema)
-      Seq(assignToNearest(one, cents).select(col("list"))
-        .head().getInt(0))
+  private def probeLists(spark: SparkSession,
+      cents: Array[(Int, Array[Double])], qs: Seq[(Long, Seq[Double])],
+      nprobe: Int): Seq[(Long, Seq[Double], Seq[Int])] = {
+    val own: Map[Long, Int] =
+      if (cents.length < HierAssignThreshold) Map.empty
+      else assignToNearest(spark.createDataFrame(qs)
+          .toDF("vec_id", "embedding"), cents)
+        .select(col("vec_id"), col("list")).collect()
+        .map(r => r.getLong(0) -> r.getInt(1)).toMap
+    qs.map { case (qid, q) =>
+      val qn = math.sqrt(q.map(x => x * x).sum)
+      val ranked = cents.map { case (i, c) =>
+        val cNorm = math.sqrt(c.map(x => x * x).sum)
+        (i, c.indices.map(d => c(d) * q(d)).sum / (cNorm * qn))
+      }.sortBy { case (list, cos) => (-cos, list) }
+        .take(nprobe).map(_._1).toSeq
+      (qid, q, (ranked ++ own.get(qid)).distinct)
     }
+  }
 
   /** argmax cosine against the (constant) centroid set via the native
     * [[graft.functions.PqArgmin]] over NORMALIZED centroids: with
@@ -1884,9 +1892,8 @@ object Similarity {
   def writeIvfIndex(e: DataFrame, path: String,
       nlist: Int = 16, iters: Int = 3): Unit = {
     val cents = ivfTrain(e, nlist, iters)
-    cents.coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
-    val cArr = cents.collect()
-      .map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
+    writeSmall(cents, s"$path/centroids")
+    val cArr = collectCentroids(cents)
     // repartition on the partition column BEFORE the partitioned
     // write: without it every write task emits one file per list it
     // touches — tasks×nlist small files (measured: the r11 derived-
@@ -1915,17 +1922,13 @@ object Similarity {
       k: Int = 5, nprobe: Int = 4,
       excludeId: Option[Long] = None,
       pred: Column = lit(true)): DataFrame = {
-    val cents = readCentroids(spark, path)
-    val lists = (rankedProbeLists(cents, query, nprobe) ++
-      assignedListOf(spark, cents, query)).distinct
-    val q = typedLit(query)
-    val base = spark.read.parquet(s"$path/corpus")
-      .filter(col("list").isin(lists.toIndexedSeq: _*))
-      .where(pred)
-    excludeId.fold(base)(id => base.filter(col("vec_id") =!= id))
+    val (_, _, lists) = probeLists(spark, readCentroids(spark, path),
+      Seq(0L -> query), nprobe).head
+    probeTail(spark.read.parquet(s"$path/corpus")
+      .filter(col("list").isin(lists: _*)).where(pred)
       .select(col("vec_id").as("neighbor_id"),
-        round(Vectors.cosine(col("embedding"), q), 6).as("cos_sim"))
-      .orderBy(col("cos_sim").desc, col("neighbor_id")).limit(k)
+        round(Vectors.cosine(col("embedding"), typedLit(query)), 6)
+          .as("cos_sim")), k, excludeId)
   }
 
   /** IVF search: assign queries to their `nprobe` nearest lists, scan
@@ -1948,7 +1951,7 @@ object Similarity {
     */
   def annIvfSearch(e: DataFrame, nQueries: Int = 10, k: Int = 5,
       nlist: Int = 16, nprobe: Int = 10, dims0: Int = -1): DataFrame =
-    annIvfSearchImpl(e, lit(true), nQueries, k, nlist, nprobe, dims0)
+    annIvfSearchFiltered(e, lit(true), nQueries, k, nlist, nprobe, dims0)
 
   /** FILTERED IVF search (the retrieval-pipeline shape: language = X,
     * quality ≥ τ DURING search, not as a post-filter that starves
@@ -1964,67 +1967,25 @@ object Similarity {
     */
   def annIvfSearchFiltered(e: DataFrame, pred: Column,
       nQueries: Int = 10, k: Int = 5, nlist: Int = 16, nprobe: Int = 10,
-      dims0: Int = -1): DataFrame =
-    annIvfSearchImpl(e, pred, nQueries, k, nlist, nprobe, dims0)
-
-  private def annIvfSearchImpl(e: DataFrame, pred: Column,
-      nQueries: Int, k: Int, nlist: Int, nprobe: Int,
-      dims0: Int): DataFrame = {
-    val centroids = ivfTrain(e, nlist, dims0 = dims0).collect()
-      .map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
+      dims0: Int = -1): DataFrame = {
+    val spark = e.sparkSession
+    val centroids = collectCentroids(ivfTrain(e, nlist, dims0 = dims0))
     val corpus = assignToNearest(e, centroids)
       .where(pred)
       .select(col("vec_id").as("neighbor_id"), col("embedding").as("ce"),
         col("list"))
-    // query probes: top-nprobe lists by centroid similarity. Sorting
-    // ascending on (−s, list) makes score ties break to the LOWER
-    // list — the same side assignToNearest's PqArgmin takes — so a
-    // query's own list is always among its probes even when two
-    // centroids tie (duplicate centroids from converged seeds; the
-    // r9 assignment rewrite flipped its tie-break low, and a
-    // high-breaking probe side could leave the query's list unprobed
-    // at the nprobe cut). NOTE this per-row nlist-term expression is
-    // bounded by nQueries rows and stays fine at driver scale, but at
-    // the thousands-of-lists a 100 TB corpus wants, probe selection
-    // belongs driver-side against the bounded centroid table — which
-    // is exactly what the persisted-index path (ivfIndexProbe) does.
-    val probeSets = centroids.map { case (i, c) =>
-      val cl = typedLit(c.toSeq)
-      val norm = math.sqrt(c.map(x => x * x).sum)
-      struct((-Vectors.dot(col("embedding"), cl) / norm).as("s"),
-        lit(i).as("list"))
-    }
-    val queries = e.filter(col("vec_id") < nQueries)
-    val ranked = queries
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
-        explode(slice(array_sort(array(probeSets.toIndexedSeq: _*)), 1, nprobe)
-          .getField("list")).as("list"))
-    // ABOVE HierAssignThreshold storage assignment is two-level, so a
-    // query's own STORED list may not be its exact-nearest centroid —
-    // the tie-break argument above covers the flat regime only. Union
-    // the query's own assignment (computed by the SAME assignToNearest
-    // the corpus used) so the self-neighborhood is always probed; the
-    // duplicate probe rows this creates collapse in scored.distinct().
-    val (probes, mayDup) =
-      if (centroids.length < HierAssignThreshold) (ranked, false)
-      else (ranked.unionByName(assignToNearest(queries, centroids)
-        .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
-          col("list"))), true)
-    val scoredBase = broadcast(probes).join(corpus,
-        Seq("list")).filter(col("neighbor_id") =!= col("query_id"))
+    // one (query, list, query vector) row per probe — nQueries×nprobe
+    // rows, broadcast; probe lists are distinct per query and each
+    // corpus vector lives in one list, so no candidate repeats
+    val probes = broadcast(spark.createDataFrame(
+        probeLists(spark, centroids, queryVectors(e, nQueries), nprobe)
+          .flatMap { case (qid, q, lists) => lists.map(l => (qid, l, q)) })
+      .toDF("query_id", "list", "qe"))
+    val scored = probes.join(corpus, Seq("list"))
+      .filter(col("neighbor_id") =!= col("query_id"))
       .select(col("query_id"), col("neighbor_id"),
         round(Vectors.cosine(col("qe"), col("ce")), 6).as("cos_sim"))
-    // the dedup shuffle exists ONLY for the two-level branch, whose
-    // own-assignment union can probe a list twice; in the flat regime
-    // probe lists are unique per query and each corpus vector lives
-    // in exactly one list, so distinct() was an identity that still
-    // shuffled every scored candidate row (r17, guide §2.4)
-    val scored = if (mayDup) scoredBase.distinct() else scoredBase
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"), col("cos_sim"))
+    topKPerQuery(scored, "cos_sim", k)
   }
 
   // ---------------------------------------------------------------
@@ -2100,8 +2061,7 @@ object Similarity {
     */
   private def ivfPqEncode(assigned: DataFrame, centFrame: DataFrame,
       books: Array[(Int, Int, Array[Double])], dims: Int): DataFrame = {
-    val m = books.map(_._1).max + 1
-    val ksub = books.map(_._2).max + 1
+    val (m, ksub) = bookShape(books)
     val dsub = dims / m
     val cube = centsCube(books, m)
     val cn = bookTable(books, m, ksub)((_, c) => c.map(x => x * x).sum)
@@ -2134,6 +2094,12 @@ object Similarity {
     (0 until m).map(s => element_at(element_at(dt, s + 1),
       element_at(col("codes"), s + 1) + 1)).reduce(_ + _)
 
+  /** q·c per list — the query-centroid term of the IVF-PQ numerator. */
+  private def centDots(cents: Array[(Int, Array[Double])],
+      q: Seq[Double]): Map[Int, Double] =
+    cents.map { case (i, c) => i -> c.indices.map(d => c(d) * q(d)).sum }
+      .toMap
+
   /** IVF-PQ composite search — the FAISS IndexIVFPQ layout (Jégou et
     * al., TPAMI 2011 §IV), the workhorse big-corpus index: the coarse
     * quantizer prunes (only `nprobe` of `nlist` cells are scanned, the
@@ -2164,7 +2130,7 @@ object Similarity {
   def annIvfPqSearch(e: DataFrame, nQueries: Int = 10, k: Int = 5,
       nlist: Int = 16, nprobe: Int = 10, m: Int = 16, ksub: Int = 64,
       rerank: Int = 50, dims0: Int = -1): DataFrame =
-    annIvfPqSearchImpl(e, lit(true), nQueries, k, nlist, nprobe, m,
+    annIvfPqSearchFiltered(e, lit(true), nQueries, k, nlist, nprobe, m,
       ksub, rerank, dims0)
 
   /** FILTERED composite search: the predicate lands on the assigned
@@ -2180,18 +2146,11 @@ object Similarity {
   def annIvfPqSearchFiltered(e: DataFrame, pred: Column,
       nQueries: Int = 10, k: Int = 5, nlist: Int = 16, nprobe: Int = 10,
       m: Int = 16, ksub: Int = 64, rerank: Int = 50,
-      dims0: Int = -1): DataFrame =
-    annIvfPqSearchImpl(e, pred, nQueries, k, nlist, nprobe, m, ksub,
-      rerank, dims0)
-
-  private def annIvfPqSearchImpl(e: DataFrame, pred: Column,
-      nQueries: Int, k: Int, nlist: Int, nprobe: Int, m: Int, ksub: Int,
-      rerank: Int, dims0: Int): DataFrame = {
+      dims0: Int = -1): DataFrame = {
     val spark = e.sparkSession
     val dims = dimsOf(e, dims0)
     val dsub = dims / m
-    val centroids = ivfTrain(e, nlist, dims0 = dims).collect()
-      .map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
+    val centroids = collectCentroids(ivfTrain(e, nlist, dims0 = dims))
     // assign ONCE over the full corpus — and PERSIST it (r17, guide
     // §2.4/§5): the O(n·nlist·dims) assignment pass otherwise ran
     // twice per search — once materializing pqTrain's residual slices
@@ -2210,31 +2169,16 @@ object Similarity {
       val codes = ivfPqEncode(assigned.where(pred), centFrame, books, dims)
         .select(col("vec_id").as("neighbor_id"), col("list"),
           col("codes"), col("rnorm"))
-      val qs = e.filter(col("vec_id") < nQueries)
-        .select(col("vec_id"), col("embedding").cast("array<double>"))
-        .collect()
-        .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-        .sortBy(_._1)
-      // two-level storage assignment can differ from the exact ranking
-      // (the [[annIvfSearchImpl]] own-list guard, same reasoning)
-      val own: Map[Long, Int] =
-        if (centroids.length < HierAssignThreshold) Map.empty
-        else assignToNearest(e.filter(col("vec_id") < nQueries), centroids)
-          .select(col("vec_id"), col("list")).collect()
-          .map(r => r.getLong(0) -> r.getInt(1)).toMap
+      val qs = queryVectors(e, nQueries)
       // per-(query, probed list) rows: the m×ksub residual dot table
       // rides each row (nQueries×nprobe×m×ksub doubles — bounded),
-      // q·c_list is a driver-computed scalar. Probe ranking sorts
-      // (−cos, list) so ties break LOW, the assignment's side.
-      val probeRows = qs.toSeq.flatMap { case (qid, q) =>
-        val qn = math.sqrt(q.map(x => x * x).sum)
-        val dt = dotTable(books, m, ksub, dsub, q.toIndexedSeq)
-        val qDotC = centroids.map { case (i, c) =>
-          i -> c.indices.map(d => c(d) * q(d)).sum
-        }.toMap
-        (rankedProbeLists(centroids, q.toIndexedSeq, nprobe) ++
-            own.get(qid)).distinct
-          .map(l => (qid, l, dt, qn, qDotC(l)))
+      // q·c_list is a driver-computed scalar
+      val probeRows = probeLists(spark, centroids, qs, nprobe).flatMap {
+        case (qid, q, lists) =>
+          val qn = math.sqrt(q.map(x => x * x).sum)
+          val dt = dotTable(books, m, ksub, dsub, q.toIndexedSeq)
+          val qDotC = centDots(centroids, q)
+          lists.map(l => (qid, l, dt, qn, qDotC(l)))
       }
       val queries = broadcast(spark.createDataFrame(probeRows)
         .toDF("query_id", "list", "dt", "qn", "qcl"))
@@ -2243,19 +2187,12 @@ object Similarity {
         .select(col("query_id"), col("neighbor_id"),
           round((col("qcl") + dtSumCol(col("dt"), m)) /
             (col("qn") * col("rnorm")), 6).as("adc_cos"))
-      val w = Window.partitionBy(col("query_id"))
-        .orderBy(col("adc_cos").desc, col("neighbor_id"))
       // eager, driver-bounded (nQueries×max(k, rerank) rows): pins the
       // shortlist so the cached assignment can be released before the
       // lazy refine tail executes
-      val adcTopN = scored
-        .withColumn("rank", row_number().over(w).cast("long"))
-        .filter(col("rank") <= math.max(k, rerank))
+      val adcTopN = topKPerQuery(scored, "adc_cos", math.max(k, rerank))
         .localCheckpoint(true)
-      if (rerank <= 0)
-        adcTopN.select(col("query_id"), col("neighbor_id"), col("rank"),
-          col("adc_cos"))
-      else refineShortlist(e, adcTopN, qs, k)
+      if (rerank <= 0) adcTopN else refineShortlist(e, adcTopN, qs, k)
     } finally assigned.unpersist(blocking = false)
   }
 
@@ -2274,17 +2211,13 @@ object Similarity {
     val spark = e.sparkSession
     val dims = dimsOf(e, dims0)
     val cents = ivfTrain(e, nlist, iters, dims0 = dims)
-    cents.coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
-    val cArr = cents.collect()
-      .map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
+    writeSmall(cents, s"$path/centroids")
+    val cArr = collectCentroids(cents)
     val assigned = assignToNearest(Par.ensure(e), cArr)
     val centLookup = centLookupFrame(spark, cArr)
     val books = pqTrain(residualFrame(assigned, centLookup, dims),
       m, ksub, iters, dims)
-    spark.createDataFrame(
-        books.toSeq.map { case (s, i, c) => (s, i, c.toSeq) })
-      .toDF("sub", "code", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/codebooks")
+    writeBooks(spark, books, s"$path/codebooks")
     // one file per list (the writeIvfIndex small-files discipline)
     ivfPqEncode(assigned, ivfPqCentFrame(spark, cArr, books, m, ksub,
         dims / m), books, dims)
@@ -2310,45 +2243,18 @@ object Similarity {
       excludeId: Option[Long] = None,
       pred: Column = lit(true)): DataFrame = {
     val cents = readCentroids(spark, path)
-    val books = spark.read.parquet(s"$path/codebooks").collect()
-      .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
-    val m = books.map(_._1).max + 1
-    val ksub = books.map(_._2).max + 1
-    val dsub = books.head._3.length
-    require(query.length == m * dsub,
-      s"ivfPqIndexProbe: query has ${query.length} dims but the index " +
-        s"at $path was trained on ${m * dsub} (m=$m × dsub=$dsub)")
+    val (books, m, ksub, dsub) = probeBooks(spark, path, query)
     val qn = math.sqrt(query.map(x => x * x).sum)
-    val qDotC = cents.map { case (i, c) =>
-      i -> c.indices.map(d => c(d) * query(d)).sum
-    }.toMap
-    val lists = (rankedProbeLists(cents, query, nprobe) ++
-      assignedListOf(spark, cents, query)).distinct
+    val qDotC = centDots(cents, query)
+    val (_, _, lists) = probeLists(spark, cents, Seq(0L -> query), nprobe).head
     val dt = typedLit(dotTable(books, m, ksub, dsub, query.toIndexedSeq))
     val qcl = element_at(
       typedLit(lists.map(l => l -> qDotC(l)).toMap), col("list"))
-    val base = spark.read.parquet(s"$path/codes")
-      .filter(col("list").isin(lists.toIndexedSeq: _*))
-      .where(pred)
-    val scored = excludeId.fold(base)(id =>
-        base.filter(col("vec_id") =!= id))
+    probeTail(spark.read.parquet(s"$path/codes")
+      .filter(col("list").isin(lists: _*)).where(pred)
       .select(col("vec_id").as("neighbor_id"),
         round((qcl + dtSumCol(dt, m)) / (lit(qn) * col("rnorm")), 6)
-          .as("adc_cos"))
-    val short = scored
-      .orderBy(col("adc_cos").desc, col("neighbor_id"))
-      .limit(math.max(k, rerank))
-    refineFrom match {
-      case None => short.limit(k)
-      case Some(raw) =>
-        val q = typedLit(query)
-        raw.select(col("vec_id").as("neighbor_id"), col("embedding"))
-          .join(broadcast(short.select(col("neighbor_id"))),
-            Seq("neighbor_id"))
-          .select(col("neighbor_id"),
-            round(Vectors.cosine(col("embedding"), q), 6).as("cos_sim"))
-          .orderBy(col("cos_sim").desc, col("neighbor_id")).limit(k)
-    }
+          .as("adc_cos")), k, excludeId, rerank, refineFrom, query)
   }
 
   /** Index MAINTENANCE, IVF-PQ flavor: appends land one file per
@@ -2363,13 +2269,11 @@ object Similarity {
     * so re-training is a REBUILD from the caller's raw corpus
     * ([[writeIvfPqIndex]], the [[retrainPqIndex]] raw-frame trade).
     */
-  def compactIvfPqIndex(spark: SparkSession, path: String): Unit = {
-    spark.read.parquet(s"$path/codes").distinct()
-      .repartition(col("list"))
-      .write.mode("overwrite").partitionBy("list")
-      .parquet(s"$path/codes__compact")
-    IndexIo.swapInto(spark, s"$path/codes__compact", s"$path/codes")
-  }
+  def compactIvfPqIndex(spark: SparkSession, path: String): Unit =
+    IndexIo.rewrite(spark, "compact", s"$path/codes" -> (side =>
+      spark.read.parquet(s"$path/codes").distinct()
+        .repartition(col("list"))
+        .write.mode("overwrite").partitionBy("list").parquet(side)))
 
   /** Append new vectors to a persisted [[writeIvfPqIndex]] index
     * WITHOUT retraining: assign against the stored centroids, encode
@@ -2384,17 +2288,12 @@ object Similarity {
       dims0: Int = -1): Unit = {
     val spark = newVectors.sparkSession
     val cents = readCentroids(spark, path)
-    val books = spark.read.parquet(s"$path/codebooks").collect()
-      .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
-    val m = books.map(_._1).max + 1
-    val ksub = books.map(_._2).max + 1
+    val books = readBooks(spark, path)
+    val (m, ksub) = bookShape(books)
     val dims = dimsOf(newVectors, dims0)
-    val codesSchema = spark.read.parquet(s"$path/codes").schema
-    ivfPqEncode(assignToNearest(newVectors, cents),
+    appendAligned(ivfPqEncode(assignToNearest(newVectors, cents),
         ivfPqCentFrame(spark, cents, books, m, ksub, dims / m),
-        books, dims)
-      .select(codesSchema.map(f => col(f.name).cast(f.dataType)): _*)
-      .write.mode("append").partitionBy("list").parquet(s"$path/codes")
+        books, dims), s"$path/codes", "list")
   }
 
   /** Persist the multi-table LSH index PARTITIONED BY (tbl, bucket) —
@@ -2408,13 +2307,11 @@ object Similarity {
     */
   def writeLshIndex(e: DataFrame, path: String,
       planes: Int = 6, tables: Int = 4, dims0: Int = -1): Unit = {
-    val dims = dimsOf(e, dims0)
-    val buckets = (0 until tables).map(t => bucketCol(dims, planes, t))
     // same one-file-per-cell discipline as writeIvfIndex: without the
     // repartition every task writes a file into each (tbl, bucket)
     // dir it touches — tasks × tables·2^planes small files
-    e.select(col("vec_id"), col("embedding"), posexplode(array(buckets: _*)))
-      .withColumnRenamed("pos", "tbl").withColumnRenamed("col", "bucket")
+    bucketRows(e, dimsOf(e, dims0), planes, tables)(
+        col("vec_id"), col("embedding"))
       .repartition(col("tbl"), col("bucket"))
       .write.mode("overwrite").partitionBy("tbl", "bucket").parquet(path)
   }
@@ -2429,11 +2326,8 @@ object Similarity {
     */
   def appendToLshIndex(newVectors: DataFrame, path: String,
       planes: Int = 6, tables: Int = 4, dims0: Int = -1): Unit = {
-    val dims = dimsOf(newVectors, dims0)
-    val buckets = (0 until tables).map(t => bucketCol(dims, planes, t))
-    newVectors
-      .select(col("vec_id"), col("embedding"), posexplode(array(buckets: _*)))
-      .withColumnRenamed("pos", "tbl").withColumnRenamed("col", "bucket")
+    bucketRows(newVectors, dimsOf(newVectors, dims0), planes, tables)(
+        col("vec_id"), col("embedding"))
       .write.mode("append").partitionBy("tbl", "bucket").parquet(path)
   }
 
@@ -2451,17 +2345,15 @@ object Similarity {
     * carries no arrival order to adjudicate "newer", and the probe's
     * max-per-neighbor already tolerates multi-row ids), and the
     * bucket files rewrite one file per cell (the writeLshIndex
-    * discipline). Side dir + [[IndexIo.swapInto]]: the output is
+    * discipline). Side dir + [[IndexIo.rewrite]]: the output is
     * computed FROM the live index, so in-place overwrite would delete
     * what the plan reads.
     */
-  def compactLshIndex(spark: SparkSession, path: String): Unit = {
-    spark.read.parquet(path).distinct()
-      .repartition(col("tbl"), col("bucket"))
-      .write.mode("overwrite").partitionBy("tbl", "bucket")
-      .parquet(path + "__compact")
-    IndexIo.swapInto(spark, path + "__compact", path)
-  }
+  def compactLshIndex(spark: SparkSession, path: String): Unit =
+    IndexIo.rewrite(spark, "compact", path -> (side =>
+      spark.read.parquet(path).distinct()
+        .repartition(col("tbl"), col("bucket"))
+        .write.mode("overwrite").partitionBy("tbl", "bucket").parquet(side)))
 
   /** Top-k probe against a persisted [[writeLshIndex]] index. The
     * query's bucket per table (+ Hamming-1 multiprobe) is computed
@@ -2488,13 +2380,12 @@ object Similarity {
     val cond = probed.map { case (t, b) =>
       col("tbl") === t && col("bucket") === b
     }.reduce(_ || _)
-    val q = typedLit(query)
-    val base = spark.read.parquet(path).filter(cond).where(pred)
-    excludeId.fold(base)(id => base.filter(col("vec_id") =!= id))
+    probeTail(spark.read.parquet(path).filter(cond).where(pred)
       .select(col("vec_id").as("neighbor_id"),
-        round(Vectors.cosine(col("embedding"), q), 6).as("cos_sim"))
-      .groupBy(col("neighbor_id")).agg(max(col("cos_sim")).as("cos_sim"))
-      .orderBy(col("cos_sim").desc, col("neighbor_id")).limit(k)
+        round(Vectors.cosine(col("embedding"), typedLit(query)), 6)
+          .as("cos_sim"))
+      .groupBy(col("neighbor_id")).agg(max(col("cos_sim")).as("cos_sim")),
+      k, excludeId)
   }
 
   /** End-to-end approximate top-k: L independent hash tables of
@@ -2508,7 +2399,7 @@ object Similarity {
     */
   def annLshSearch(e: DataFrame, nQueries: Int = 10, k: Int = 5,
       planes: Int = 6, tables: Int = 4, dims0: Int = -1): DataFrame =
-    annLshSearchImpl(e, lit(true), nQueries, k, planes, tables, dims0,
+    annLshSearchFiltered(e, lit(true), nQueries, k, planes, tables, dims0,
       probeRadius = 1)
 
   /** FILTERED LSH search (the retrieval-pipeline shape, LSH flavor):
@@ -2530,18 +2421,9 @@ object Similarity {
     */
   def annLshSearchFiltered(e: DataFrame, pred: Column,
       nQueries: Int = 10, k: Int = 5, planes: Int = 6, tables: Int = 4,
-      dims0: Int = -1, probeRadius: Int = 2): DataFrame =
-    annLshSearchImpl(e, pred, nQueries, k, planes, tables, dims0,
-      probeRadius)
-
-  private def annLshSearchImpl(e: DataFrame, pred: Column,
-      nQueries: Int, k: Int, planes: Int, tables: Int, dims0: Int,
-      probeRadius: Int): DataFrame = {
-    val dims = dimsOf(e, dims0)
-    val buckets = (0 until tables).map(t => bucketCol(dims, planes, t))
-    val all = e.select(col("vec_id"), col("embedding"),
-      posexplode(array(buckets: _*)))
-      .withColumnRenamed("pos", "tbl").withColumnRenamed("col", "bucket")
+      dims0: Int = -1, probeRadius: Int = 2): DataFrame = {
+    val all = bucketRows(e, dimsOf(e, dims0), planes, tables)(
+      col("vec_id"), col("embedding"))
     val corpus = all.where(pred)
       .select(col("vec_id").as("neighbor_id"),
         col("embedding").as("ce"), col("tbl"), col("bucket").as("cb"))
@@ -2562,11 +2444,7 @@ object Similarity {
       .select(col("query_id"), col("neighbor_id"),
         round(Vectors.cosine(col("qe"), col("ce")), 6).as("cos_sim"))
       .distinct()
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"), col("cos_sim"))
+    topKPerQuery(scored, "cos_sim", k)
   }
 
   /** Recall@k of an ANN result against the exact brute-force top-k on
@@ -2663,7 +2541,7 @@ object Similarity {
     */
   def annSq8Search(e: DataFrame, nQueries: Int = 10, k: Int = 5,
       rerank: Int = 50, dims0: Int = -1): DataFrame =
-    annSq8SearchImpl(e, lit(true), nQueries, k, rerank, dims0)
+    annSq8SearchFiltered(e, lit(true), nQueries, k, rerank, dims0)
 
   /** FILTERED SQ8 search — the family's during-search-predicate
     * surface: like PQ, the scan is exhaustive over its candidate set,
@@ -2675,11 +2553,7 @@ object Similarity {
     */
   def annSq8SearchFiltered(e: DataFrame, pred: Column,
       nQueries: Int = 10, k: Int = 5, rerank: Int = 50,
-      dims0: Int = -1): DataFrame =
-    annSq8SearchImpl(e, pred, nQueries, k, rerank, dims0)
-
-  private def annSq8SearchImpl(e: DataFrame, pred: Column,
-      nQueries: Int, k: Int, rerank: Int, dims0: Int): DataFrame = {
+      dims0: Int = -1): DataFrame = {
     val dims = dimsOf(e, dims0)
     val scale = sq8Scale(e)
     val codes = sq8Encode(Par.ensure(e).where(pred), scale, dims)
@@ -2691,21 +2565,9 @@ object Similarity {
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         round(Vectors.cosine(col("qc"),
           col("codes").cast("array<double>")), 6).as("q_cos"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("q_cos").desc, col("neighbor_id"))
-    val short = scored.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= math.max(k, rerank))
-    if (rerank <= 0)
-      short.filter(col("rank") <= k)
-        .select(col("query_id"), col("neighbor_id"), col("rank"),
-          col("q_cos").as("cos_sim"))
-    else {
-      val qs = e.filter(col("vec_id") < nQueries)
-        .select(col("vec_id"), col("embedding").cast("array<double>"))
-        .collect()
-        .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-      refineShortlist(e, short, qs, k)
-    }
+    val short = topKPerQuery(scored, "q_cos", math.max(k, rerank))
+    if (rerank <= 0) short.withColumnRenamed("q_cos", "cos_sim")
+    else refineShortlist(e, short, queryVectors(e, nQueries), k)
   }
 
   /** The shared SQ8 oracle CTE chain through `sq` (the refined top-k
@@ -2786,9 +2648,8 @@ object Similarity {
   def writeSq8Index(e: DataFrame, path: String, dims0: Int = -1): Unit = {
     val dims = dimsOf(e, dims0)
     val scale = sq8Scale(e)
-    e.sparkSession.createDataFrame(Seq((scale, dims)))
-      .toDF("scale", "dims")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
+    writeSmall(e.sparkSession.createDataFrame(Seq((scale, dims)))
+      .toDF("scale", "dims"), s"$path/meta")
     sq8Encode(Par.ensure(e), scale, dims)
       .write.mode("overwrite").parquet(s"$path/codes")
   }
@@ -2816,33 +2677,17 @@ object Similarity {
       refineFrom: Option[DataFrame] = None,
       excludeId: Option[Long] = None,
       pred: Column = lit(true)): DataFrame = {
-    val meta = spark.read.parquet(s"$path/meta").collect()(0)
+    val meta = readMeta(spark, path)
     val scale = meta.getDouble(0)
     val dims = meta.getInt(1)
     require(query.length == dims,
       s"sq8IndexProbe: query has ${query.length} dims, index $dims")
     val qc = typedLit(sq8QuantizeDriver(query, scale))
-    val base = spark.read.parquet(s"$path/codes").where(pred)
-    val scored = excludeId.fold(base)(id =>
-        base.filter(col("vec_id") =!= id))
+    // the quantized cosine is the result's cos_sim when nothing refines
+    probeTail(spark.read.parquet(s"$path/codes").where(pred)
       .select(col("vec_id").as("neighbor_id"),
         round(Vectors.cosine(col("codes").cast("array<double>"), qc), 6)
-          .as("q_cos"))
-    val short = scored
-      .orderBy(col("q_cos").desc, col("neighbor_id"))
-      .limit(math.max(k, rerank))
-    refineFrom match {
-      case None => short.limit(k)
-        .select(col("neighbor_id"), col("q_cos").as("cos_sim"))
-      case Some(raw) =>
-        val q = typedLit(query)
-        raw.select(col("vec_id").as("neighbor_id"), col("embedding"))
-          .join(broadcast(short.select(col("neighbor_id"))),
-            Seq("neighbor_id"))
-          .select(col("neighbor_id"),
-            round(Vectors.cosine(col("embedding"), q), 6).as("cos_sim"))
-          .orderBy(col("cos_sim").desc, col("neighbor_id")).limit(k)
-    }
+          .as("cos_sim")), k, excludeId, rerank, refineFrom, query)
   }
 
   /** Append new vectors WITHOUT recalibrating: encode with the stored
@@ -2853,12 +2698,9 @@ object Similarity {
     * so rebuild IS retrain).
     */
   def appendToSq8Index(newVectors: DataFrame, path: String): Unit = {
-    val spark = newVectors.sparkSession
-    val meta = spark.read.parquet(s"$path/meta").collect()(0)
-    val codesSchema = spark.read.parquet(s"$path/codes").schema
-    sq8Encode(newVectors, meta.getDouble(0), meta.getInt(1))
-      .select(codesSchema.map(f => col(f.name).cast(f.dataType)): _*)
-      .write.mode("append").parquet(s"$path/codes")
+    val meta = readMeta(newVectors.sparkSession, path)
+    appendAligned(sq8Encode(newVectors, meta.getDouble(0), meta.getInt(1)),
+      s"$path/codes")
   }
 
   /** Shared SQ8 saturation summary: ONE map-side scan counting the
@@ -2915,7 +2757,7 @@ object Similarity {
   def sq8DriftReport(current: DataFrame, path: String,
       threshold: Double = 0.01, sampleMod: Long = 1L): DataFrame = {
     val spark = current.sparkSession
-    val meta = spark.read.parquet(s"$path/meta").collect()(0)
+    val meta = readMeta(spark, path)
     sq8SatSummary(distortionSample(Par.ensure(current), sampleMod),
       meta.getDouble(0), meta.getInt(1), threshold)
   }

@@ -192,7 +192,7 @@ object Unigram {
       (unigramVocabFromCounts(wcDf, vocabSize, maxPieceLen).collect(),
         Bpe.collectVocabGuarded(wcDf, "encodeDocsUnigram",
           Bpe.MaxIncrementalVocabRows))
-    } finally Bpe.unpersistCheckpointed(wcDf)
+    } finally Par.unpersistCheckpointed(wcDf)
     val costOf = vocabRows.map(r =>
       r.getString(1) -> ((r.getLong(0), r.getLong(3)))).toMap
     // The 16-codepoint cap is the ORACLE's CTE-unroll constraint, not

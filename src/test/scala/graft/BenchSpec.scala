@@ -189,4 +189,16 @@ class BenchSpec extends AnyFunSuite {
     // not an absent field
     assert(Bench.quadraticLanesJson(Seq("q1_pricing_agg")) == "[]")
   }
+
+  test("artifact naming: only the sf0.1 dir writes bench_full.json; " +
+      "every other dir writes and reads its own bench_<basename>.json") {
+    assert(Bench.artifactFile("data/sf0.1") == "bench_full.json")
+    assert(Bench.artifactFile("/data/sf0.1/") == "bench_full.json")
+    assert(Bench.artifactFile("/scratch/graft_scale10") ==
+      "bench_graft_scale10.json")
+    assert(Bench.artifactFile("graft_scale100/") ==
+      "bench_graft_scale100.json")
+    assert(Bench.artifactFile("/data/sf0.01") ==
+      "bench_sf0.01.json")
+  }
 }

@@ -393,6 +393,34 @@ class SimilaritySpec extends GraftSpecBase {
     assert(hit.head.getAs[Double]("cos_sim") == 1.0)
   }
 
+  test("annIvfSearch / annIvfPqSearch (two-level regime): each " +
+      "query's own stored list is scanned even when the exact ranking " +
+      "probes none") {
+    initLog()
+    import spark.implicits._
+    // 300 orthogonal one-hot directions (each keeps its own cluster
+    // through training, so nlist = 300 >= 256 stays two-level) plus an
+    // exact twin of each query at id 1000 + q. A twin is assigned with
+    // its query, so with nprobe = 0 only the own-stored-list probe can
+    // reach it.
+    val dims = 300
+    def oneHot(i: Int): Seq[Float] =
+      Seq.tabulate(dims)(d => if (d == i) 1f else 0f)
+    val nQueries = 10
+    val e = ((0 until dims).map(i => (i.toLong, oneHot(i))) ++
+        (0 until nQueries).map(q => (1000L + q, oneHot(q))))
+      .toDF("vec_id", "embedding")
+    assert(Similarity.ivfTrain(e, dims, dims0 = dims).count() >= 256)
+    val want = (0 until nQueries).map(q => (q.toLong, 1000L + q, 1.0)).toSet
+    def top1(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("neighbor_id"),
+        r.getAs[Double]("cos_sim"))).toSet
+    assert(top1(Similarity.annIvfSearch(e, nQueries, k = 1, nlist = dims,
+      nprobe = 0, dims0 = dims)) == want)
+    assert(top1(Similarity.annIvfPqSearch(e, nQueries, k = 1, nlist = dims,
+      nprobe = 0, m = 4, ksub = 16, rerank = 10, dims0 = dims)) == want)
+  }
+
   test("ivfTrain sampled-training branch: bounded train set, " +
       "deterministic, full-train twin when under the cap") {
     initLog()
