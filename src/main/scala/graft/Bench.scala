@@ -1,4 +1,7 @@
 package graft
+
+import org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+
 object Bench {
 
   /** Structured-Streaming throughput of the reference pipeline's twin:
@@ -435,6 +438,16 @@ object Bench {
       case base => s"bench_$base.json"
     }
 
+  /** The `codegen_compiles` artifact field: per lane, in run order, the
+    * compiles of each timed run. The first run is the lane's cold one;
+    * with the generated-class cache sized to the catalog
+    * ([[GraftSession.CodegenCacheEntries]]) the second is 0 unless the
+    * lane inlines a per-call value into generated code.
+    */
+  private[graft] def compilesJson(rs: Seq[(String, Seq[Long])]): String =
+    rs.map { case (k, v) => "\"" + k + "\":" + v.mkString("[", ",", "]") }
+      .mkString("{", ",", "}")
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
@@ -505,7 +518,7 @@ object Bench {
     // rounds (r15's 100× artifacts read phantom 3× family moves that
     // were pure build-attribution shuffle)
     var hnswBuildSec = -1.0
-    val results = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
+    val laneRuns = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
       // the ann_hnsw* lanes share one memoized graph build; the lanes
       // are alphabetically consecutive, so the first non-family lane
       // marks the family done — release the memo's block storage
@@ -521,17 +534,24 @@ object Bench {
         hnswBuildSec = (System.nanoTime() - tb) / 1e9
       }
       var failed = false
+      // Janino compiles per timed run: a lane that recompiles on its
+      // warm (second) run shows up as a count, not as unexplained
+      // seconds
+      val compiles = Seq.newBuilder[Long]
       val times = (1 to 2).map { _ =>
+        val c0 = METRIC_COMPILATION_TIME.getCount
         val t0 = System.nanoTime()
         try { run(fn(spark, sfDir)) }
         catch { case t: Throwable =>
           failed = true
           System.err.println(s"[bench] FAILED $name: ${t.getClass.getName}: ${t.getMessage}")
         }
+        compiles += METRIC_COMPILATION_TIME.getCount - c0
         (System.nanoTime() - t0) / 1e9
       }
-      (name, if (failed) -1.0 else times.min)
+      (name, if (failed) -1.0 else times.min, compiles.result())
     }
+    val results = laneRuns.map(r => r._1 -> r._2)
     def fmt(v: Double, dec: Int): String =
       String.format(java.util.Locale.ROOT, s"%.${dec}f", Double.box(v))
     def queriesJson(rs: Seq[(String, Double)], dec: Int): String =
@@ -649,14 +669,15 @@ object Bench {
     // says null, not negative seconds (r16 ADVICE)
     val hnswBuildJson =
       if (hnswBuildSec < 0) "null" else fmt(hnswBuildSec, 4)
+    val cacheEntries = spark.conf.get("spark.sql.codegen.cache.maxEntries")
     def line(qs: String, extra: String = "") =
-      s"""{"metric":"total","value":${fmt(total, 4)},"total_nonquadratic":${fmt(totalNonQuadratic, 4)},"quadratic_lanes":$quadraticJson,"hnsw_build_sec":$hnswBuildJson,"unit":"sec","nq":${results.size},"queries":$qs,"failed":$failedJson,"regressed":$regressedJson,"transient":$transientJson,"median_shift":${fmt(shift, 3)},"stream_rows_per_sec":${fmt(streamRps, 0)},"stream_rows_per_sec_stateful":${fmt(streamRpsStateful, 0)},"loadavg":${fmt(loadavg, 2)},"probe_ms":${fmt(probeMs, 1)},"probe_quiet_ms":${fmt(probeQuiet, 1)},"probe_par_ms":${fmt(probeParMs, 1)},"probe_par_quiet_ms":${fmt(probeParQuiet, 1)},"noisy":$noisy,"full":"$artifact","sf":"$sfDir"$extra}"""
+      s"""{"metric":"total","value":${fmt(total, 4)},"total_nonquadratic":${fmt(totalNonQuadratic, 4)},"quadratic_lanes":$quadraticJson,"hnsw_build_sec":$hnswBuildJson,"unit":"sec","nq":${results.size},"queries":$qs,"failed":$failedJson,"regressed":$regressedJson,"transient":$transientJson,"median_shift":${fmt(shift, 3)},"stream_rows_per_sec":${fmt(streamRps, 0)},"stream_rows_per_sec_stateful":${fmt(streamRpsStateful, 0)},"loadavg":${fmt(loadavg, 2)},"probe_ms":${fmt(probeMs, 1)},"probe_quiet_ms":${fmt(probeQuiet, 1)},"probe_par_ms":${fmt(probeParMs, 1)},"probe_par_quiet_ms":${fmt(probeParQuiet, 1)},"noisy":$noisy,"codegen_cache_entries":$cacheEntries,"full":"$artifact","sf":"$sfDir"$extra}"""
     // Full map (4-decimal) to the file artifact; headline map
     // (3-decimal) to stdout, with a hard 1600-char guard: should
     // the headline set ever outgrow the tail budget, drop precision
     // rather than ship another unparseable round.
     val fullLine = line(queriesJson(results, 4),
-      s""","probe_host":"$host","probe_ver":$ProbeVersion,"probe_hist":${histJson(probeHist)},"probe_par_hist":${histJson(probeParHist)},"prev":$prevJson""")
+      s""","codegen_compiles":${compilesJson(laneRuns.map(r => r._1 -> r._3))},"probe_host":"$host","probe_ver":$ProbeVersion,"probe_hist":${histJson(probeHist)},"probe_par_hist":${histJson(probeParHist)},"prev":$prevJson""")
     try java.nio.file.Files.write(java.nio.file.Paths.get(artifact),
       (fullLine + "\n").getBytes("UTF-8"))
     catch { case _: Throwable => () }

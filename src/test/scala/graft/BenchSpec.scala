@@ -190,6 +190,17 @@ class BenchSpec extends AnyFunSuite {
     assert(Bench.quadraticLanesJson(Seq("q1_pricing_agg")) == "[]")
   }
 
+  test("codegen_compiles artifact field: per-lane compiles of each " +
+      "timed run, in run order, as parseable JSON") {
+    val json = Bench.compilesJson(Seq("q_b" -> Seq(31L, 0L),
+      "ann_a" -> Seq(12L, 12L)))
+    assert(json == """{"q_b":[31,0],"ann_a":[12,12]}""")
+    val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
+    assert(root.get("ann_a").get(1).asLong == 12L)
+    // a dev run of no lanes still emits the field
+    assert(Bench.compilesJson(Seq.empty) == "{}")
+  }
+
   test("artifact naming: only the sf0.1 dir writes bench_full.json; " +
       "every other dir writes and reads its own bench_<basename>.json") {
     assert(Bench.artifactFile("data/sf0.1") == "bench_full.json")

@@ -15,7 +15,10 @@ object GraftSpecBase {
     java.nio.file.Files.createTempDirectory("graft-warehouse-").toString
 }
 
-/** Shared session per suite (lazy; local[4], UTC, nanos handling). */
+/** Shared session per suite (lazy; local[4], UTC, nanos handling).
+  * Usually the test JVM's first session to generate code, so it sizes
+  * the JVM-wide codegen cache: specs run with the cache lanes get.
+  */
 trait GraftSpecBase extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -24,6 +27,8 @@ trait GraftSpecBase extends AnyFunSuite {
     .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.sql.adaptive.enabled", "true")
+    .config("spark.sql.codegen.cache.maxEntries",
+      GraftSession.CodegenCacheEntries.toLong)
     .config("spark.sql.warehouse.dir", GraftSpecBase.warehouseDir)
     .config("spark.ui.enabled", "false")
     .getOrCreate()
