@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
-
 object Bench {
 
   /** Structured-Streaming throughput of the reference pipeline's twin:
@@ -438,19 +436,21 @@ object Bench {
       case base => s"bench_$base.json"
     }
 
-  /** The `codegen_compiles` artifact field: per lane, in run order, the
-    * compiles of each timed run. The first run is the lane's cold one;
-    * with the generated-class cache sized to the catalog
-    * ([[GraftSession.CodegenCacheEntries]]) the second is 0 unless the
-    * lane inlines a per-call value into generated code.
+  /** The `metrics` artifact field: per lane, in run order, the
+    * [[LaneMetrics]] of its second (warm) timed run, with `compiles`
+    * holding both runs' Janino compiles; `hnsw_build` is the shared
+    * ann_hnsw* graph prebuild (`hnsw_build_sec`). The first run is the
+    * lane's cold one; with the generated-class cache sized to the
+    * catalog ([[GraftSession.CodegenCacheEntries]]) the second compiles
+    * nothing unless the lane inlines a per-call value into generated
+    * code.
     */
-  private[graft] def compilesJson(rs: Seq[(String, Seq[Long])]): String =
-    rs.map { case (k, v) => "\"" + k + "\":" + v.mkString("[", ",", "]") }
-      .mkString("{", ",", "}")
+  private[graft] def metricsJson(rs: Seq[(String, LaneMetrics.Counts)])
+      : String =
+    rs.map { case (k, m) => "\"" + k + "\":" + m.json }.mkString("{", ",", "}")
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     // partitions sized to the benched data dir (the §5 rule as
     // default behavior) — at sf0.1 this is still = cores; at the
     // 100×/300× scale corpora it is what keeps per-task state bounded
@@ -463,7 +463,7 @@ object Bench {
     // the process-global property and hash-mismatch the full-table
     // oracles (r13 ADVICE).
     System.setProperty(graft.operators.Similarity.QuadraticCapProp, "true")
-    try mainTimed(sfDir, cpus)
+    try mainTimed(sfDir, GraftSession.cpus)
     finally System.clearProperty(graft.operators.Similarity.QuadraticCapProp)
   }
 
@@ -518,6 +518,7 @@ object Bench {
     // rounds (r15's 100× artifacts read phantom 3× family moves that
     // were pure build-attribution shuffle)
     var hnswBuildSec = -1.0
+    var hnswBuildMetrics = Seq.empty[(String, LaneMetrics.Counts)]
     val laneRuns = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
       // the ann_hnsw* lanes share one memoized graph build; the lanes
       // are alphabetically consecutive, so the first non-family lane
@@ -528,28 +529,29 @@ object Bench {
       if (!name.startsWith("ann_hnsw"))
         graft.operators.Hnsw.releaseGraphCache(spark)
       else if (hnswBuildSec < 0) {
+        val m = LaneMetrics.attach(spark)
         val tb = System.nanoTime()
         try graft.operators.Hnsw.prebuildLaneGraph(spark, sfDir)
         catch { case _: Throwable => () }
         hnswBuildSec = (System.nanoTime() - tb) / 1e9
+        hnswBuildMetrics = Seq("hnsw_build" -> m.detach())
       }
       var failed = false
-      // Janino compiles per timed run: a lane that recompiles on its
-      // warm (second) run shows up as a count, not as unexplained
-      // seconds
-      val compiles = Seq.newBuilder[Long]
-      val times = (1 to 2).map { _ =>
-        val c0 = METRIC_COMPILATION_TIME.getCount
+      // each timed run under its own collector, detached (drained)
+      // outside the timed window
+      val runs = (1 to 2).map { _ =>
+        val m = LaneMetrics.attach(spark)
         val t0 = System.nanoTime()
         try { run(fn(spark, sfDir)) }
         catch { case t: Throwable =>
           failed = true
           System.err.println(s"[bench] FAILED $name: ${t.getClass.getName}: ${t.getMessage}")
         }
-        compiles += METRIC_COMPILATION_TIME.getCount - c0
-        (System.nanoTime() - t0) / 1e9
+        ((System.nanoTime() - t0) / 1e9, m.detach())
       }
-      (name, if (failed) -1.0 else times.min, compiles.result())
+      val Seq(cold, warm) = runs.map(_._2)
+      (name, if (failed) -1.0 else runs.map(_._1).min,
+        warm.copy(compiles = cold.compiles ++ warm.compiles))
     }
     val results = laneRuns.map(r => r._1 -> r._2)
     def fmt(v: Double, dec: Int): String =
@@ -677,7 +679,7 @@ object Bench {
     // the headline set ever outgrow the tail budget, drop precision
     // rather than ship another unparseable round.
     val fullLine = line(queriesJson(results, 4),
-      s""","codegen_compiles":${compilesJson(laneRuns.map(r => r._1 -> r._3))},"probe_host":"$host","probe_ver":$ProbeVersion,"probe_hist":${histJson(probeHist)},"probe_par_hist":${histJson(probeParHist)},"prev":$prevJson""")
+      s""","metrics":${metricsJson(hnswBuildMetrics ++ laneRuns.map(r => r._1 -> r._3))},"probe_host":"$host","probe_ver":$ProbeVersion,"probe_hist":${histJson(probeHist)},"probe_par_hist":${histJson(probeParHist)},"prev":$prevJson""")
     try java.nio.file.Files.write(java.nio.file.Paths.get(artifact),
       (fullLine + "\n").getBytes("UTF-8"))
     catch { case _: Throwable => () }

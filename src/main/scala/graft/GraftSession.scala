@@ -48,6 +48,12 @@ object GraftSession {
     */
   val CodegenCacheEntries: Int = 4096
 
+  /** Local cores every graft main runs with: `SPARK_GRAFT_CPUS`,
+    * default 4. One default, so `Bench`, `Verify` and the tools time
+    * a lane at the same `local[N]`.
+    */
+  def cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+
   /** Master-agnostic pre-configured builder (cluster deploys: set
     * master/resources downstream, or rely on spark-submit).
     */

@@ -5,8 +5,7 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
-    val spark = GraftSession.localFor(cpus, sfDir, "graft-verify")
+    val spark = GraftSession.localFor(GraftSession.cpus, sfDir, "graft-verify")
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // Dev loop: SPARK_GRAFT_ONLY=a,b,c dumps just those queries.

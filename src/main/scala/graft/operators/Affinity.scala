@@ -60,10 +60,11 @@ object Affinity {
     // order that does NOT involve lift, so the top-k cut commutes with
     // the per-item-count joins: cut FIRST (TakeOrderedAndProject), then
     // join counts onto k rows with the k-row side as the broadcast
-    // build. The 10× A/B that forced this (tools/AbAffinity): joining
-    // counts onto the FULL pair table went sort-merge at 10× — two
-    // extra shuffle+sorts of the largest intermediate (22.7 s vs 9.6 s
-    // broadcast-counts vs 2.8 s this shape). Broadcasting itemCounts
+    // build. The 10× A/B that forced this (SURVEY.md r7 scale curve,
+    // commit 9d46d64): joining counts onto the FULL pair table went
+    // sort-merge at 10× — two extra shuffle+sorts of the largest
+    // intermediate (22.7 s vs 9.6 s broadcast-counts vs 2.8 s this
+    // shape). Broadcasting itemCounts
     // instead would bound the operator by item-vocabulary size; the
     // k-row build keeps both joins shuffle-free at ANY vocabulary.
     val topk = pairs

@@ -578,7 +578,7 @@ object Bpe {
     * word. The shared vocab side of [[vocabTokenCounts]] and
     * [[chunkDocsBpe]].
     */
-  def vocabSymCounts(docs: DataFrame, merges: Seq[(String, String)],
+  private def vocabSymCounts(docs: DataFrame, merges: Seq[(String, String)],
       textCol: String = "text"): DataFrame =
     wordCounts(docs, textCol)
       .select(col("word"),

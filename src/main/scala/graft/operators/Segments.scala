@@ -173,7 +173,7 @@ object Segments {
     * frame; see [[segmentDedupFrames]] for the frame contract and
     * `sep`. (An exchange-sharing variant — repartition segs on
     * seg_md5 so the agg and probe branches reuse one shuffle — was
-    * measured neutral at sf0.1 (0.62s vs 0.61s, AbSegmentsExchange)
+    * measured neutral at sf0.1 (0.62s vs 0.61s; commit 829b62c, SURVEY.md)
     * while forfeiting the df-count's map-side partial, so the
     * two-map-stage shape stays.)
     */

@@ -13,8 +13,8 @@ import graft.sources.Tables
 object AnnSweep {
   def main(args: Array[String]): Unit = {
     val dir = args.lift(0).getOrElse("/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
-    val spark = graft.GraftSession.localFor(cpus, dir, "graft-ann-sweep")
+    val spark = graft.GraftSession.localFor(graft.GraftSession.cpus,
+      dir, "graft-ann-sweep")
     spark.sparkContext.setLogLevel("ERROR")
     // semdedup mode: time semanticDedup at a given nlist (the knob
     // that must scale ≈ n/target_cluster_size — this measures it)

@@ -64,8 +64,7 @@ object BpeScale {
     val r = args.lift(0).map(_.toInt).getOrElse(256)
     val dir = args.lift(1).getOrElse("/root/testdata/sf0.1")
     val batchedOnly = args.lift(2).contains("batchedonly")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = graft.GraftSession.localFor(cpus,
+    val spark = graft.GraftSession.localFor(graft.GraftSession.cpus,
       if (dir == "heaps") "/root/testdata/sf0.1" else dir,
       "graft-bpe-scale")
     spark.sparkContext.setLogLevel("ERROR")

@@ -50,8 +50,7 @@ object ExactPairsScale {
 
   def main(args: Array[String]): Unit = {
     val maxN = args.lift(0).map(_.toLong).getOrElse(200000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = graft.GraftSession.localFor(cpus,
+    val spark = graft.GraftSession.localFor(graft.GraftSession.cpus,
       "/root/testdata/sf0.01", "graft-exact-pairs-scale")
     spark.sparkContext.setLogLevel("ERROR")
     val sizes = Iterator.iterate(2000L)(_ * 10).takeWhile(_ <= maxN).toSeq

@@ -14,8 +14,8 @@ object HnswProbeBench {
   def main(args: Array[String]): Unit = {
     val dir = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val n = args.lift(1).map(_.toInt).getOrElse(8)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = graft.GraftSession.localFor(cpus, dir, "graft-hnsw-probe")
+    val spark = graft.GraftSession.localFor(graft.GraftSession.cpus,
+      dir, "graft-hnsw-probe")
     spark.sparkContext.setLogLevel("ERROR")
     val e = graft.sources.Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding"))

@@ -3,7 +3,8 @@ package graft.tools
 /** Dev-loop per-run timer: run named SparkEntry queries N times each
   * through the noop sink and print EVERY run's seconds (Bench prints
   * only the min — the distribution is what tells contention from
-  * real cost). Usage:
+  * real cost), plus one `QM <query> {…}` line per run with the run's
+  * [[graft.LaneMetrics]]. Usage:
   *   runMain graft.tools.QuickTime <sfDir> <n> <query>[,<query>...]
   */
 object QuickTime {
@@ -12,27 +13,29 @@ object QuickTime {
     val n = args.lift(1).map(_.toInt).getOrElse(4)
     val names = args.lift(2).map(_.split(",").toSeq)
       .getOrElse(Seq("q_filter_project"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     // timing path: quadratic-contract lanes cap like Bench, so a
     // QuickTime figure is comparable to the Bench lane at any scale.
     // Cleared in the finally: a correctness run sharing a non-forked
     // JVM must never inherit the cap (r13 ADVICE).
     System.setProperty(graft.operators.Similarity.QuadraticCapProp, "true")
-    try run(dir, n, names, cpus)
+    try run(dir, n, names)
     finally System.clearProperty(graft.operators.Similarity.QuadraticCapProp)
   }
 
-  private def run(dir: String, n: Int, names: Seq[String],
-      cpus: Int): Unit = {
-    val spark = graft.GraftSession.localFor(cpus, dir, "graft-quicktime")
+  private def run(dir: String, n: Int, names: Seq[String]): Unit = {
+    val spark = graft.GraftSession.localFor(graft.GraftSession.cpus, dir,
+      "graft-quicktime")
     spark.sparkContext.setLogLevel("ERROR")
     spark.range(2000000L).selectExpr("sum(id * 2)").collect()
     names.foreach { name =>
       val fn = graft.SparkEntry.queries(name)
       val times = (1 to n).map { _ =>
+        val m = graft.LaneMetrics.attach(spark)
         val t0 = System.nanoTime()
         fn(spark, dir).write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
+        val t = (System.nanoTime() - t0) / 1e9
+        println(s"QM $name ${m.detach().json}")
+        t
       }
       println(f"QT $name%-24s " +
         times.map(t => f"$t%.3f").mkString(" ") +

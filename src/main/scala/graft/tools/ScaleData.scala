@@ -47,10 +47,10 @@ object ScaleData {
     val n = args.lift(2).map(_.toInt).getOrElse(10)
     val only: Option[Set[String]] =
       args.lift(3).map(_.split(",").map(_.trim).toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16").toInt
     // GraftSession keeps timestamps LTZ on the round-trip — a scaled
     // copy that flips o_orderdate to TIMESTAMP_NTZ breaks unix_micros
-    val spark = graft.GraftSession.local(cpus, "graft-scale-data")
+    val spark = graft.GraftSession.local(graft.GraftSession.cpus,
+      "graft-scale-data")
     spark.sparkContext.setLogLevel("WARN")
 
     def write(df: => DataFrame, name: String): Unit =

@@ -33,8 +33,8 @@ object SegScale {
   def main(args: Array[String]): Unit = {
     val dir = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val plant = args.lift(1).contains("plant")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = graft.GraftSession.localFor(cpus, dir, "graft-seg-scale")
+    val spark = graft.GraftSession.localFor(graft.GraftSession.cpus,
+      dir, "graft-seg-scale")
     spark.sparkContext.setLogLevel("WARN")
     spark.range(2000000L).selectExpr("sum(id * 2)").collect() // JIT warm
 

@@ -9,8 +9,7 @@ object StreamRate {
   def main(args: Array[String]): Unit = {
     val n = args.lift(0).map(_.toInt).getOrElse(3)
     val secs = args.lift(1).map(_.toInt).getOrElse(12)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = graft.GraftSession.localFor(cpus,
+    val spark = graft.GraftSession.localFor(graft.GraftSession.cpus,
       "/root/testdata/sf0.1", "graft-stream-rate")
     spark.sparkContext.setLogLevel("ERROR")
     val win = (1 to n).map(_ => graft.Bench.streamBench(spark, secs))

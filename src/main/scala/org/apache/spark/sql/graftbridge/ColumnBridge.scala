@@ -26,4 +26,11 @@ object ColumnBridge {
   def logicalPlan(df: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].logicalPlan
+
+  /** The QueryExecution a finished SQL execution ran (null on events
+    * replayed from a log).
+    */
+  def queryExecution(
+      e: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd)
+      : Option[org.apache.spark.sql.execution.QueryExecution] = Option(e.qe)
 }

@@ -190,15 +190,26 @@ class BenchSpec extends AnyFunSuite {
     assert(Bench.quadraticLanesJson(Seq("q1_pricing_agg")) == "[]")
   }
 
-  test("codegen_compiles artifact field: per-lane compiles of each " +
-      "timed run, in run order, as parseable JSON") {
-    val json = Bench.compilesJson(Seq("q_b" -> Seq(31L, 0L),
-      "ann_a" -> Seq(12L, 12L)))
-    assert(json == """{"q_b":[31,0],"ann_a":[12,12]}""")
+  test("metrics artifact field: per-lane compiles of each timed run, " +
+      "in run order, as parseable JSON") {
+    val zero = LaneMetrics.Counts(0, 0, 0, 0, 0, Map.empty, 0L, 0L, 0L, 0L,
+      0L, 0L, 0L, 0L, 0L, Seq.empty, 0, 0, Seq.empty, 0)
+    val json = Bench.metricsJson(Seq(
+      "q_b" -> zero.copy(compiles = Seq(31L, 0L)),
+      "ann_a" -> zero.copy(jobs = 3, joins = Map("BroadcastHashJoin" -> 2),
+        slowStageOps = Seq("Generate", "Scan \"x\""),
+        compiles = Seq(12L, 12L))))
+    assert(json.startsWith("""{"q_b":{"jobs":0,"""))
+    assert(json.contains(""""compiles":[31,0]"""))
     val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
-    assert(root.get("ann_a").get(1).asLong == 12L)
+    import scala.jdk.CollectionConverters._
+    assert(root.fieldNames().asScala.toSeq == Seq("q_b", "ann_a"))
+    assert(root.get("q_b").get("compiles").toString == "[31,0]")
+    assert(root.get("ann_a").get("compiles").get(1).asLong == 12L)
+    assert(root.get("ann_a").get("joins").get("BroadcastHashJoin").asInt == 2)
+    assert(root.get("ann_a").get("slow_stage_ops").get(1).asText == "Scan \"x\"")
     // a dev run of no lanes still emits the field
-    assert(Bench.compilesJson(Seq.empty) == "{}")
+    assert(Bench.metricsJson(Seq.empty) == "{}")
   }
 
   test("artifact naming: only the sf0.1 dir writes bench_full.json; " +

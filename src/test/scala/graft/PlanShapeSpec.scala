@@ -607,9 +607,10 @@ class PlanShapeSpec extends GraftSpecBase {
       df.collect()
       val p = plan(df)
       // the per-item-count joins must NOT sort-merge the pair table —
-      // the 10× A/B (tools/AbAffinity) measured that shape 2.4× slower;
-      // both ride the k-row broadcast build (explicit hints, so they
-      // survive autoBroadcast=-1, i.e. cluster-scale inputs)
+      // the 10× A/B (SURVEY.md r7 scale curve, commit 9d46d64) measured
+      // that shape 2.4× slower; both ride the k-row broadcast build
+      // (explicit hints, so they survive autoBroadcast=-1, i.e.
+      // cluster-scale inputs)
       assert(!allNodes(p).exists { case j: SortMergeJoinExec =>
         j.leftKeys.map(_.sql).mkString.contains("item_a") ||
           j.leftKeys.map(_.sql).mkString.contains("item_b")
