@@ -293,6 +293,20 @@ object Bench {
     */
   private[graft] val ProbeVersion = 4
 
+  /** Whether the previous artifact's probe history may seed this
+    * run's baseline: only when it was recorded on the same host name,
+    * at the same core count and by the same probe version. A committed
+    * artifact travels across machines, and hosts of different sizes
+    * share a name (`vm`), so a baseline from a faster or wider box
+    * would mark this one permanently noisy. Artifacts predating a key
+    * carry none and are discarded (the window self-seeds in one run).
+    */
+  private[graft] def keepProbeHistory(prevHost: Option[String],
+      prevCores: Option[Int], prevVer: Option[Int],
+      host: String, cores: Int): Boolean =
+    prevHost.contains(host) && prevCores.contains(cores) &&
+      prevVer.contains(ProbeVersion)
+
   /** Append the current reading to the (already host-filtered) prev
     * history, keeping the last [[ProbeHistLen]] entries. Garbage
     * readings (≤ 0, corrupted artifact) are dropped.
@@ -603,15 +617,11 @@ object Bench {
           node.properties().asScala
             .map(e => e.getKey -> e.getValue.asDouble).toMap
         }.getOrElse(Map.empty[String, Double])
-        // probe history is HOST-KEYED: a committed artifact travels
-        // across machines, and a baseline from a faster box would
-        // mark this one permanently noisy (r13 ADVICE). Artifacts
-        // predating probe_host carry no key — discarded (the window
-        // self-seeds in one run).
         def hist(field: String): Seq[Double] =
-          if (!Option(root.get("probe_host")).map(_.asText).contains(host)
-              || !Option(root.get("probe_ver")).map(_.asInt)
-                .contains(ProbeVersion))
+          if (!keepProbeHistory(
+              Option(root.get("probe_host")).map(_.asText),
+              Option(root.get("probe_cores")).map(_.asInt),
+              Option(root.get("probe_ver")).map(_.asInt), host, cpus))
             Seq.empty
           else Option(root.get(field)).map { node =>
             import scala.jdk.CollectionConverters._
@@ -679,7 +689,7 @@ object Bench {
     // the headline set ever outgrow the tail budget, drop precision
     // rather than ship another unparseable round.
     val fullLine = line(queriesJson(results, 4),
-      s""","metrics":${metricsJson(hnswBuildMetrics ++ laneRuns.map(r => r._1 -> r._3))},"probe_host":"$host","probe_ver":$ProbeVersion,"probe_hist":${histJson(probeHist)},"probe_par_hist":${histJson(probeParHist)},"prev":$prevJson""")
+      s""","metrics":${metricsJson(hnswBuildMetrics ++ laneRuns.map(r => r._1 -> r._3))},"probe_host":"$host","probe_cores":$cpus,"probe_ver":$ProbeVersion,"probe_hist":${histJson(probeHist)},"probe_par_hist":${histJson(probeParHist)},"prev":$prevJson""")
     try java.nio.file.Files.write(java.nio.file.Paths.get(artifact),
       (fullLine + "\n").getBytes("UTF-8"))
     catch { case _: Throwable => () }

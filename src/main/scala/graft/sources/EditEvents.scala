@@ -40,10 +40,18 @@ object EditEvents {
   /** From a DataFrame with a string `value` column (Kafka-shaped frame:
     * Kafka sources expose `value: binary` — callers cast to string),
     * produce the typed edit-event DataFrame with an event-time `ts`.
+    *
+    * Each value is decoded exactly once. The decoded struct is split
+    * into columns by `inline` of a one-element array, a Generate that a
+    * downstream filter on its output cannot be pushed below: split by a
+    * plain projection, Catalyst pushes the reference job's
+    * user-type/namespace filter under it and inlines `from_json` into
+    * each predicate, parsing every value three times. Rows and values
+    * are those of the projection form (a null or malformed value gives
+    * a row of nulls).
     */
   def fromJson(frames: DataFrame, valueCol: String = "value"): DataFrame =
     frames
-      .select(decode(col(valueCol).cast(StringType)).as("e"))
-      .select(col("e.*"))
+      .select(inline(array(decode(col(valueCol).cast(StringType)))))
       .withColumn("ts", to_timestamp(col("timestamp")))
 }

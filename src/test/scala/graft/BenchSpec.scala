@@ -139,6 +139,19 @@ class BenchSpec extends AnyFunSuite {
     assert(Bench.probeWindow(400.0, Seq(-1.0, 0.0)) == Seq(400.0))
   }
 
+  test("probe history from a different core count is discarded") {
+    def keep(host: Option[String], cores: Option[Int], ver: Option[Int]) =
+      Bench.keepProbeHistory(host, cores, ver, host = "vm", cores = 4)
+    val ver = Some(Bench.ProbeVersion)
+    assert(keep(Some("vm"), Some(4), ver))
+    // same host name, wider box: its faster baseline must not carry over
+    assert(!keep(Some("vm"), Some(32), ver))
+    // artifacts predating probe_cores carry no key
+    assert(!keep(Some("vm"), None, ver))
+    assert(!keep(Some("other"), Some(4), ver))
+    assert(!keep(Some("vm"), Some(4), Some(Bench.ProbeVersion - 1)))
+  }
+
   test("confirmation pass: a mid-suite transient stall clears on the " +
       "post-suite re-time; a real regression survives it (r14)") {
     // the r14 phenomenon: two quiet back-to-back runs each flagged a

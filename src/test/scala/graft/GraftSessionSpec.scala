@@ -48,6 +48,8 @@ class GraftSessionSpec extends GraftSpecBase {
         .asInstanceOf[scala.collection.Map[String, String]]
       assert(options.get("spark.sql.codegen.cache.maxEntries")
         .contains(GraftSession.CodegenCacheEntries.toString))
+      assert(options.get("spark.sql.streaming.checkpointFileManagerClass")
+        .contains(GraftSession.CheckpointFileManagerClass))
       // the nanos-timestamp feed reads through Tables.events
       val n = graft.sources.Tables.events(s, sf).limit(5).count()
       assert(n == 5)

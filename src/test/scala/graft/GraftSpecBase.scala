@@ -18,6 +18,8 @@ object GraftSpecBase {
 /** Shared session per suite (lazy; local[4], UTC, nanos handling).
   * Usually the test JVM's first session to generate code, so it sizes
   * the JVM-wide codegen cache: specs run with the cache lanes get.
+  * Streaming specs write their checkpoints through graft's checkpoint
+  * file manager, as every `GraftSession` stream does.
   */
 trait GraftSpecBase extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSession.builder()
@@ -29,6 +31,8 @@ trait GraftSpecBase extends AnyFunSuite {
     .config("spark.sql.adaptive.enabled", "true")
     .config("spark.sql.codegen.cache.maxEntries",
       GraftSession.CodegenCacheEntries.toLong)
+    .config("spark.sql.streaming.checkpointFileManagerClass",
+      GraftSession.CheckpointFileManagerClass)
     .config("spark.sql.warehouse.dir", GraftSpecBase.warehouseDir)
     .config("spark.ui.enabled", "false")
     .getOrCreate()

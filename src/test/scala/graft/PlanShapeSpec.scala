@@ -848,4 +848,46 @@ class PlanShapeSpec extends GraftSpecBase {
     assert(!ns.exists(n => n.contains("CartesianProduct") ||
       n.startsWith("BroadcastNestedLoopJoin")), ns.mkString(","))
   }
+
+  test("edit decode: the reference job's plan parses each JSON value once") {
+    import org.apache.spark.sql.catalyst.expressions.JsonToStructs
+    import graft.sources.EditEvents
+    import graft.streaming.WikiEditPipeline
+    val dir = java.nio.file.Files.createTempDirectory("graft_decode_plan")
+    java.nio.file.Files.write(dir.resolve("edits.json"),
+      ("""{"id":"1","domain":"d","namespace":"main namespace",""" +
+        """"user_type":"human","timestamp":"2024-01-01T00:00:00Z",""" +
+        """"old_length":1,"new_length":3}""").getBytes("UTF-8"))
+    val deltas = WikiEditPipeline.editDeltas(
+      EditEvents.fromJson(spark.read.text(dir.toString)))
+    val decodes = deltas.queryExecution.optimizedPlan
+      .flatMap(_.expressions.flatMap(_.collect { case j: JsonToStructs => j }))
+    // a filter pushed below a projection split re-parses once per field
+    assert(decodes.size == 1, deltas.queryExecution.optimizedPlan.toString)
+    assert(deltas.collect().map(r => r.getLong(2)).toSeq == Seq(2L))
+  }
+
+  test("edit decode: rows equal the projection-split form's for valid, " +
+      "malformed, null, empty, non-object and partial values") {
+    import org.apache.spark.sql.functions.{col, to_timestamp}
+    import graft.sources.EditEvents
+    import spark.implicits._
+    val frames = Seq[String](
+      """{"id":"1","domain":"d","namespace":"main namespace",""" +
+        """"user_type":"human","timestamp":"2024-01-01T00:00:05Z",""" +
+        """"old_length":1,"new_length":3}""",
+      "{bad", null, "", "[]",
+      """{"id":"2","domain":"e","timestamp":"2024-01-01T00:01:00Z",""" +
+        """"old_length":"x","new_length":7}""").toDF("value")
+    // the decode before the single-parse change, kept as the reference
+    val reference = frames
+      .select(EditEvents.decode(col("value")).as("e"))
+      .select(col("e.*"))
+      .withColumn("ts", to_timestamp(col("timestamp")))
+    val got = EditEvents.fromJson(frames)
+    assert(got.columns.toSeq == reference.columns.toSeq)
+    def rows(df: DataFrame) = df.collect().map(_.toSeq.toString).sorted.toSeq
+    assert(rows(got).size == 6)
+    assert(rows(got) == rows(reference))
+  }
 }
