@@ -533,39 +533,27 @@ object Bench {
     // were pure build-attribution shuffle)
     var hnswBuildSec = -1.0
     var hnswBuildMetrics = Seq.empty[(String, LaneMetrics.Counts)]
-    val laneRuns = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
-      // the ann_hnsw* lanes share one memoized graph build; the lanes
-      // are alphabetically consecutive, so the first non-family lane
-      // marks the family done — release the memo's block storage
-      // before running it (GB-scale at 100×: leaving it pinned for the
-      // ~170 later lanes OOMed two r14 scale runs at a MOVING lane).
-      // No-op when the memo is empty.
-      if (!name.startsWith("ann_hnsw"))
-        graft.operators.Hnsw.releaseGraphCache(spark)
-      else if (hnswBuildSec < 0) {
-        val m = LaneMetrics.attach(spark)
-        val tb = System.nanoTime()
-        try graft.operators.Hnsw.prebuildLaneGraph(spark, sfDir)
-        catch { case _: Throwable => () }
-        hnswBuildSec = (System.nanoTime() - tb) / 1e9
-        hnswBuildMetrics = Seq("hnsw_build" -> m.detach())
-      }
-      var failed = false
+    val laneRuns = LaneRunner.inOrder(spark, sfDir, selected.toSeq.sortBy(_._1),
+        build => {
+          val m = LaneMetrics.attach(spark)
+          val tb = System.nanoTime()
+          build()
+          hnswBuildSec = (System.nanoTime() - tb) / 1e9
+          hnswBuildMetrics = Seq("hnsw_build" -> m.detach())
+        }) { (name, fn) =>
       // each timed run under its own collector, detached (drained)
-      // outside the timed window
+      // after the runner released what the result read
       val runs = (1 to 2).map { _ =>
         val m = LaneMetrics.attach(spark)
-        val t0 = System.nanoTime()
-        try { run(fn(spark, sfDir)) }
-        catch { case t: Throwable =>
-          failed = true
-          System.err.println(s"[bench] FAILED $name: ${t.getClass.getName}: ${t.getMessage}")
-        }
-        ((System.nanoTime() - t0) / 1e9, m.detach())
+        val r = LaneRunner.run(spark, sfDir, fn)(run)
+        r.failure.foreach(t => System.err.println(
+          s"[bench] FAILED $name: ${t.getClass.getName}: ${t.getMessage}"))
+        (r, m.detach())
       }
       val Seq(cold, warm) = runs.map(_._2)
-      (name, if (failed) -1.0 else runs.map(_._1).min,
-        warm.copy(compiles = cold.compiles ++ warm.compiles))
+      (name, if (runs.exists(_._1.failure.isDefined)) -1.0 else runs.map(_._1.seconds).min,
+        warm.copy(compiles = cold.compiles ++ warm.compiles),
+        runs.exists(_._1.leaked.nonEmpty))
     }
     val results = laneRuns.map(r => r._1 -> r._2)
     def fmt(v: Double, dec: Int): String =
@@ -586,6 +574,8 @@ object Bench {
       case (n, v) if v >= 0 && !quadraticContract(n) => v
     }.sum + failed.count(!quadraticContract(_)) * 1000.0 + buildSec
     val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val leakedJson = laneRuns.filter(_._4).map("\"" + _._1 + "\"")
+      .mkString("[", ",", "]")
     // two streaming throughput figures next to the batch seconds — the
     // reference's actual modality is an unbounded stream; the windowed
     // lane is the reference pipeline's twin, the stateful lane drives
@@ -664,9 +654,8 @@ object Bench {
     val (regressed, transientLanes) =
       confirmRegressions(candidates, prevMap, shift, name =>
         selected.get(name).map { fn =>
-          val t0 = System.nanoTime()
-          try { run(fn(spark, sfDir)); (System.nanoTime() - t0) / 1e9 }
-          catch { case _: Throwable => -1.0 }
+          val r = LaneRunner.run(spark, sfDir, fn)(run)
+          if (r.failure.isDefined) -1.0 else r.seconds
         }.getOrElse(-1.0))
     // a flagged ann_hnsw* re-time above rebuilds the lane memo; drop it
     graft.operators.Hnsw.releaseGraphCache(spark)
@@ -683,7 +672,7 @@ object Bench {
       if (hnswBuildSec < 0) "null" else fmt(hnswBuildSec, 4)
     val cacheEntries = spark.conf.get("spark.sql.codegen.cache.maxEntries")
     def line(qs: String, extra: String = "") =
-      s"""{"metric":"total","value":${fmt(total, 4)},"total_nonquadratic":${fmt(totalNonQuadratic, 4)},"quadratic_lanes":$quadraticJson,"hnsw_build_sec":$hnswBuildJson,"unit":"sec","nq":${results.size},"queries":$qs,"failed":$failedJson,"regressed":$regressedJson,"transient":$transientJson,"median_shift":${fmt(shift, 3)},"stream_rows_per_sec":${fmt(streamRps, 0)},"stream_rows_per_sec_stateful":${fmt(streamRpsStateful, 0)},"loadavg":${fmt(loadavg, 2)},"probe_ms":${fmt(probeMs, 1)},"probe_quiet_ms":${fmt(probeQuiet, 1)},"probe_par_ms":${fmt(probeParMs, 1)},"probe_par_quiet_ms":${fmt(probeParQuiet, 1)},"noisy":$noisy,"codegen_cache_entries":$cacheEntries,"full":"$artifact","sf":"$sfDir"$extra}"""
+      s"""{"metric":"total","value":${fmt(total, 4)},"total_nonquadratic":${fmt(totalNonQuadratic, 4)},"quadratic_lanes":$quadraticJson,"hnsw_build_sec":$hnswBuildJson,"unit":"sec","nq":${results.size},"queries":$qs,"failed":$failedJson,"leaked":$leakedJson,"regressed":$regressedJson,"transient":$transientJson,"median_shift":${fmt(shift, 3)},"stream_rows_per_sec":${fmt(streamRps, 0)},"stream_rows_per_sec_stateful":${fmt(streamRpsStateful, 0)},"loadavg":${fmt(loadavg, 2)},"probe_ms":${fmt(probeMs, 1)},"probe_quiet_ms":${fmt(probeQuiet, 1)},"probe_par_ms":${fmt(probeParMs, 1)},"probe_par_quiet_ms":${fmt(probeParQuiet, 1)},"noisy":$noisy,"codegen_cache_entries":$cacheEntries,"full":"$artifact","sf":"$sfDir"$extra}"""
     // Full map (4-decimal) to the file artifact; headline map
     // (3-decimal) to stdout, with a hard 1600-char guard: should
     // the headline set ever outgrow the tail budget, drop precision

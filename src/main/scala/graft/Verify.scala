@@ -14,12 +14,13 @@ object Verify {
       .map(_.split(",").map(_.trim).toSet)
     val selected = only.fold(SparkEntry.queries)(names =>
       SparkEntry.queries.filter { case (n, _) => names(n) })
-    selected.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
+    LaneRunner.inOrder(spark, sfDir, selected.toSeq.sortBy(_._1)) { (name, fn) =>
+      val r = LaneRunner.run(spark, sfDir, fn)(
+        _.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name"))
+      r.failure.foreach(e =>
+        System.err.println(s"[verify] $name failed: ${e.getMessage}"))
+      if (r.leaked.nonEmpty)
+        System.err.println(s"[verify] $name leaked: ${r.leaked.mkString(", ")}")
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

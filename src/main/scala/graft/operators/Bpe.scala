@@ -130,6 +130,7 @@ object Bpe {
     * pagerank/HNSW truncate-the-growing-lineage lesson, third
     * sighting). The checkpoint truncates plan and lineage to a
     * LogicalRDD; the driver lanes (R = 16 < cadence) never hit it.
+    * Each superseded anchor is released once its successor exists.
     */
   private val RepersistEvery = 64
 
@@ -137,7 +138,7 @@ object Bpe {
       textCol: String = "text"): Seq[(String, String)] = {
     require(rounds > 0 && rounds <= MaxRounds,
       s"trainMerges: rounds=$rounds outside (0, $MaxRounds]")
-    var anchor = wordCounts(docs, textCol).persist()
+    var anchor = Materialize.cache(wordCounts(docs, textCol))
     anchor.count() // ONE corpus scan; every round below is vocab-sized
     var words = anchor
     val out = Seq.newBuilder[(String, String)]
@@ -158,13 +159,11 @@ object Bpe {
         words = words.withColumn("repr",
           replace(col("repr"), lit(Sep + l + Sep + r), lit(Sep + l + r)))
         if (k % RepersistEvery == 0 && k < rounds) {
-          val next = words.localCheckpoint(true) // truncate plan+lineage
-          anchor.unpersist()
-          anchor = next
-          words = next
+          anchor = Materialize.replace(anchor, Materialize.cut(words))
+          words = anchor
         }
       }
-    } finally anchor.unpersist()
+    } finally Materialize.release(anchor)
     out.result()
   }
 
@@ -254,7 +253,7 @@ object Bpe {
     require(rounds > 0 && rounds <= MaxRounds,
       s"trainMergesBatched: rounds=$rounds outside (0, $MaxRounds]")
     require(batch > 0, s"trainMergesBatched: batch=$batch must be positive")
-    var anchor = vocab.persist()
+    var anchor = Materialize.cache(vocab)
     anchor.count()
     var words = anchor
     val out = collection.mutable.ArrayBuffer[(String, String)]()
@@ -318,14 +317,12 @@ object Bpe {
         }
         sinceRepersist += kept.length
         if (sinceRepersist >= RepersistEvery && out.length < rounds) {
-          val next = words.localCheckpoint(true) // truncate plan+lineage
-          anchor.unpersist()
-          anchor = next
-          words = next
+          anchor = Materialize.replace(anchor, Materialize.cut(words))
+          words = anchor
           sinceRepersist = 0
         }
       }
-    } finally anchor.unpersist()
+    } finally Materialize.release(anchor)
     out.toSeq
   }
 
@@ -408,7 +405,7 @@ object Bpe {
     // call site (incremental char/byte trainers, unigram encode/EM).
     // The checkpoint is the vocab-bounded (word, cnt) frame; its
     // blocks are released as soon as both actions are done.
-    val m = vc.localCheckpoint(true)
+    val m = Materialize.cut(vc)
     try {
       val n = m.count()
       require(n <= maxVocabRows,
@@ -419,7 +416,7 @@ object Bpe {
           "vocab) or raise maxVocabRows if the driver heap genuinely " +
           "holds it.")
       m.collect().map(r => (r.getString(0), r.getLong(1)))
-    } finally Par.unpersistCheckpointed(m)
+    } finally Materialize.release(m)
   }
 
   /** Left-to-right non-overlapping single-pass merge — the exact
@@ -800,15 +797,13 @@ object Bpe {
     // the identical explode over a materialized frame at the 10×
     // corpus, and ~121 s of the 137 s 100× lane. The checkpoint is
     // the narrow vocab-bounded (word, syms) frame (Heap's-law rows,
-    // bytes ≈ the reprs themselves); blocks are GC-released with the
-    // lane's frame (ContextCleaner), the pplBuckets convention.
-    val vocab = wordCounts(docs, textCol)
+    // bytes ≈ the reprs themselves), read by the returned frame.
+    val vocab = Materialize.cut(wordCounts(docs, textCol)
       .select(col("word"),
         split(applyMerges(col("repr"), merges), Sep).as("arr"))
       // split of the SEP-prefixed repr yields a leading empty element
       .select(col("word"),
-        slice(col("arr"), lit(2), size(col("arr")) - 1).as("syms"))
-      .localCheckpoint(true)
+        slice(col("arr"), lit(2), size(col("arr")) - 1).as("syms")))
     val vocabIds = vocab
       .select(col("word"), posexplode(col("syms")))
       .withColumnRenamed("pos", "spos").withColumnRenamed("col", "sym")

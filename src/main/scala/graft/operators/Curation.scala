@@ -208,17 +208,12 @@ object Curation {
     // and without the checkpoint each execution re-scanned the corpus
     // and re-tokenized text for the score. The narrow (id, domain,
     // score) frame is O(n)·~24 bytes — the same storage class as one
-    // shuffle of the keys. Release discipline (r17 ADVICE): the lane's
-    // returned frame reads these blocks lazily, so an explicit
-    // unpersist here would break the caller; ContextCleaner frees them
-    // when the frame is GC'd, and the bounded narrow row shape is why
-    // GC-paced release is acceptable here (the GB-scale HNSW
-    // membership, by contrast, is released explicitly).
-    val docs = Par.ensure(Tables.documents(spark, dir))
+    // shuffle of the keys. The returned frame reads these blocks
+    // lazily; the lane runner releases them once it is consumed.
+    val docs = Materialize.cut(Par.ensure(Tables.documents(spark, dir))
       .withColumn("score",
         expr("n_chars * 100L div cast(size(split(text, ' ')) as long)"))
-      .select(col("doc_id"), col("source"), col("score"))
-      .localCheckpoint(true)
+      .select(col("doc_id"), col("source"), col("score")))
     qualityBuckets(docs, "source", "score", "doc_id", tiles = 3)
       .withColumn("bucket",
         when(col("tile") === 1, "head")
@@ -242,17 +237,16 @@ object Curation {
     val docs = Tables.documents(spark, dir)
     val preds = Classifier.nbPredict(docs,
       Classifier.nbWeights(docs, "source"))
-    val scored = docs.select(col("doc_id"), col("source"))
+    // materialize the narrow scored frame once (r17, guide §2.4):
+    // qualityBuckets executes its input twice (offsets collect +
+    // ranked join), and each execution otherwise re-runs the whole
+    // NB classifier chain — train aggregation, token explode,
+    // broadcast weight join, per-doc argmax. Same rows, same oracle;
+    // measured sf0.1: 4.27 s → see OPTIMIZATION_r17.md.
+    val scored = Materialize.cut(docs.select(col("doc_id"), col("source"))
       .join(preds.select(col("doc_id"),
         floor(col("margin") * lit(100)).cast("long").as("score")),
-        Seq("doc_id"))
-      // materialize the narrow scored frame once (r17, guide §2.4):
-      // qualityBuckets executes its input twice (offsets collect +
-      // ranked join), and each execution otherwise re-runs the whole
-      // NB classifier chain — train aggregation, token explode,
-      // broadcast weight join, per-doc argmax. Same rows, same oracle;
-      // measured sf0.1: 4.27 s → see OPTIMIZATION_r17.md.
-      .localCheckpoint(true)
+        Seq("doc_id")))
     qualityBuckets(scored, "source", "score", "doc_id", tiles = 3)
       .withColumn("bucket",
         when(col("tile") === 1, "head")

@@ -115,17 +115,6 @@ object Dedup {
       .select(col("id_a"), col("id_b"), col("jaccard"))
   }
 
-  /** k minhash signatures: each shingle is hashed ONCE to a long, then
-    * the k-member hash family is derived numerically — xxhash64 over
-    * (i, baseHash) — instead of re-hashing the string k times (k×
-    * string traversals + allocations would dominate at scale).
-    */
-  def minhashSignature(sh: Column, k: Int): Column = {
-    val base = transform(sh, g => xxhash64(g))
-    transform(sequence(lit(0), lit(k - 1)),
-      i => array_min(transform(base, h => xxhash64(i, h))))
-  }
-
   /** MinHash + LSH banding near-dup pairs, verified with exact Jaccard.
     *
     * k=128 hashes, 32 bands × 4 rows: P(candidate miss | J >= 0.8) =
@@ -235,21 +224,20 @@ object Dedup {
     *   docs.join(canonicalIds(docs, pairs).filter($"doc_id" === $"canonical_id"), "doc_id")
     */
   def canonicalIds(docs: DataFrame, pairs: DataFrame,
-      maxIters: Int = 15, reliable: Boolean = false): DataFrame = {
-    def truncate(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint() else df.localCheckpoint()
+      maxIters: Int = 15, reliable: Boolean = false): DataFrame =
+      Materialize.scope {
     // pre-partition the edge list by the per-round join key BEFORE the
     // checkpoint (r18, guide §2.4 — the pageRank edge-layout rule): a
     // checkpointed frame keeps its physical partitioning, so every
     // round's `edges ⋈ labels ON v` consumes the fixed layout and only
     // the node-sized label frame moves; without this the edge set (the
     // largest frame of the loop) re-shuffled in EVERY round.
-    val edges = truncate(
+    val edges = Materialize.cut(
       pairs.select(col("id_a").as("u"), col("id_b").as("v"))
         .unionByName(pairs.select(col("id_b").as("u"), col("id_a").as("v")))
-        .repartition(col("v")))
-    var labels = truncate(docs.select(col("doc_id").as("u"),
-      col("doc_id").as("canonical_id")))
+        .repartition(col("v")), reliable)
+    var labels = Materialize.cut(docs.select(col("doc_id").as("u"),
+      col("doc_id").as("canonical_id")), reliable)
     var changed = 1L
     var iter = 0
     while (changed > 0 && iter < maxIters) {
@@ -261,15 +249,15 @@ object Dedup {
       // label is strictly below the old one — computable inside the
       // same projection. The old form re-joined next against labels
       // per round (one extra shuffle + job); now the count is a
-      // filter over the round's own checkpoint blocks.
-      val next = truncate(labels.join(nbrMin, Seq("u"), "left")
-        .select(col("u"),
+      // filter over the round's own checkpoint blocks (every read of
+      // `labels` selects past the flag).
+      labels = Materialize.replace(labels, Materialize.cut(
+        labels.join(nbrMin, Seq("u"), "left").select(col("u"),
           least(col("canonical_id"), coalesce(col("nl"), col("canonical_id")))
             .as("canonical_id"),
           (coalesce(col("nl"), col("canonical_id")) < col("canonical_id"))
-            .as("__chg")))
-      changed = next.filter(col("__chg")).count()
-      labels = next.drop("__chg")
+            .as("__chg")), reliable))
+      changed = labels.filter(col("__chg")).count()
       iter += 1
     }
     labels.select(col("u").as("doc_id"), col("canonical_id"))
@@ -315,7 +303,7 @@ object Dedup {
     // instead of recomputing the pipeline. Same rows, same oracle.
     // Measured sf0.1: 4.39 s → 1.74 s isolated (min of 4); the 100×
     // lane was 107 s with the per-step recompute.
-    minhashLshPairs(docs).localCheckpoint(true).createOrReplaceTempView(pairsV)
+    Materialize.cut(minhashLshPairs(docs)).createOrReplaceTempView(pairsV)
     docs.createOrReplaceTempView(docsV)
     try spark.sql(
       s"""WITH RECURSIVE

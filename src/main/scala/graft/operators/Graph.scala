@@ -38,9 +38,7 @@ object Graph {
     *   (the [[Dedup.canonicalIds]] convention).
     */
   def pageRank(edges: DataFrame, iters: Int = 3, damping: Double = 0.85,
-      reliable: Boolean = false): DataFrame = {
-    def truncate(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint() else df.localCheckpoint()
+      reliable: Boolean = false): DataFrame = Materialize.scope {
     // The edge list is CACHED (columnar, compressed, spills to disk,
     // recoverable from lineage), NOT localCheckpoint'ed: checkpoint
     // blocks store raw rows and are UNRECOVERABLE once evicted — at
@@ -48,14 +46,13 @@ object Graph {
     // storage pool and the run died on lost blocks. Lineage
     // truncation is only needed where lineage GROWS (ranks, below);
     // the edge lineage is a fixed shallow scan+join.
-    val e = Par.ensure(
+    val e = Materialize.cache(Par.ensure(
         edges.select(col("src"), col("dst")).distinct())
-      .repartition(col("src"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .repartition(col("src")))
     val out = e.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
-    val nodes = truncate(
+    val nodes = Materialize.cut(
       e.select(col("src").as("node"))
-        .unionByName(e.select(col("dst").as("node"))).distinct())
+        .unionByName(e.select(col("dst").as("node"))).distinct(), reliable)
     val n = nodes.count()
     // fail loudly, not with (1-d)/0 = Infinity ranks downstream
     require(n > 0, "pageRank: empty edge list (no nodes)")
@@ -67,14 +64,13 @@ object Graph {
         .select(col("dst").as("node"),
           (col("rank") / col("outdeg")).as("c"))
         .groupBy(col("node")).agg(sum(col("c")).as("contrib"))
-      ranks = truncate(nodes.join(contrib, Seq("node"), "left")
-        .select(col("node"),
+      ranks = Materialize.replace(ranks, Materialize.cut(
+        nodes.join(contrib, Seq("node"), "left").select(col("node"),
           round(lit(base) + lit(damping) * coalesce(col("contrib"), lit(0.0)),
-            9).as("rank")))
+            9).as("rank")), reliable))
     }
-    // the final ranks frame is already materialized (eager truncate),
-    // so the cache can go — nothing downstream re-reads it
-    e.unpersist(blocking = false)
+    // the final ranks frame is already materialized (eager cut): the
+    // scope releases the edge cache and the node set on return
     ranks.select(col("node"), round(col("rank"), 6).as("rank"))
   }
 
@@ -250,9 +246,9 @@ object Graph {
     // aggregate, both wedge-join sides and the existing-edge anti
     // join — and an edge generator that ends in a filter (the
     // supplierCoEdges lineitem self-join) re-ran its post-shuffle
-    // aggregation for EVERY reference. Narrow (u, v) blocks,
-    // GC-released with the lane's frame.
-    val edges = edges0.select(col("u"), col("v")).localCheckpoint(true)
+    // aggregation for EVERY reference. Narrow (u, v) blocks that the
+    // result reads.
+    val edges = Materialize.cut(edges0.select(col("u"), col("v")))
     val adj = edges.select(col("u").as("node"), col("v").as("nbr"))
       .unionByName(edges.select(col("v").as("node"), col("u").as("nbr")))
     val deg = adj.groupBy(col("node")).agg(count(lit(1)).as("d"))
@@ -321,25 +317,24 @@ object Graph {
       reliable: Boolean = false): DataFrame = {
     require(k >= 1, s"kCore: k must be >= 1, got $k")
     require(maxRounds >= 1, s"kCore: maxRounds must be >= 1, got $maxRounds")
-    def truncate(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint() else df.localCheckpoint()
     def degrees(e: DataFrame): DataFrame =
       e.select(col("u").as("node"))
         .unionByName(e.select(col("v").as("node")))
         .groupBy(col("node")).agg(count(lit(1)).as("core_deg"))
-    var e = truncate(edges.select(col("u"), col("v"))
-      .filter(col("u") =!= col("v")).distinct())
+    var e = Materialize.cut(edges.select(col("u"), col("v"))
+      .filter(col("u") =!= col("v")).distinct(), reliable)
     var m = e.count()
     var round = 0
     var converged = m == 0L
     while (!converged && round < maxRounds) {
       val keep = degrees(e).filter(col("core_deg") >= k).select(col("node"))
-      val next = truncate(
+      e = Materialize.replace(e, Materialize.cut(
         e.join(keep.withColumnRenamed("node", "u"), Seq("u"), "left_semi")
-          .join(keep.withColumnRenamed("node", "v"), Seq("v"), "left_semi"))
-      val m2 = next.count()
+          .join(keep.withColumnRenamed("node", "v"), Seq("v"), "left_semi"),
+        reliable))
+      val m2 = e.count()
       converged = m2 == m || m2 == 0L
-      e = next; m = m2; round += 1
+      m = m2; round += 1
     }
     degrees(e).filter(col("core_deg") >= k)
   }
@@ -381,19 +376,20 @@ object Graph {
     * sort. Rounds are few and fixed; labels (node-sized) get the
     * same lineage discipline as [[pageRank]].
     */
-  def labelPropagation(edges: DataFrame, rounds: Int = 3): DataFrame = {
+  def labelPropagation(edges: DataFrame, rounds: Int = 3): DataFrame =
+      Materialize.scope {
     // partitioned by NBR — the per-round join key — so the cached
     // edge layout is exchange-free in every round's labels join; only
     // node-sized label/count frames move after round 0
-    val sym = edges.select(col("u").as("node"), col("v").as("nbr"))
-      .unionByName(edges.select(col("v").as("node"), col("u").as("nbr")))
-      .distinct()
-      .repartition(col("nbr")).cache()
+    val sym = Materialize.cache(
+      edges.select(col("u").as("node"), col("v").as("nbr"))
+        .unionByName(edges.select(col("v").as("node"), col("u").as("nbr")))
+        .distinct()
+        .repartition(col("nbr")))
     var labels = sym.select(col("node")).distinct()
       .select(col("node"), col("node").as("label"))
     for (_ <- 1 to rounds)
-      labels = lpaRound(sym, labels).localCheckpoint(eager = true)
-    sym.unpersist()
+      labels = Materialize.replace(labels, Materialize.cut(lpaRound(sym, labels)))
     labels
   }
 
@@ -496,17 +492,15 @@ object Graph {
     * the lineitem self-join behind them feeds the LPA rounds AND both
     * modularity joins.
     */
-  def lpaModularity(spark: SparkSession, dir: String): DataFrame = {
-    val edges = supplierKnnEdges(spark, dir).cache()
-    // the summary is ONE row: compute it eagerly and unpersist so the
-    // cache does not outlive the call (the labelPropagation house
-    // discipline — a lane must not leave session-lifetime storage)
-    try {
+  def lpaModularity(spark: SparkSession, dir: String): DataFrame =
+    // the summary is ONE row: computed eagerly, so the scope releases
+    // the edge cache and the LPA labels before the call returns
+    Materialize.scope {
+      val edges = Materialize.cache(supplierKnnEdges(spark, dir))
       val res = modularitySummary(edges, labelPropagation(edges, rounds = 3))
       val rows = res.collect()
       spark.createDataFrame(java.util.Arrays.asList(rows: _*), res.schema)
-    } finally { edges.unpersist(); () }
-  }
+    }
 
   /** Driver contract `graph_lpa`: communities of the union-kNN(8)
     * supplier co-service graph after 3 synchronous rounds, reported

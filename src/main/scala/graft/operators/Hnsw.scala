@@ -145,24 +145,16 @@ object Hnsw {
     * dst embeddings embedded (see the object scaladoc).
     */
   def buildGraph(e: DataFrame, dims0: Int = -1): DataFrame = {
-    // standalone form (specs/tools): the membership checkpoint is
-    // released by GC/ContextCleaner with the returned frame. The
-    // query-path callers use [[buildGraphWithMem]] and release it
-    // EXPLICITLY once the adjacency is materialized (r17 ADVICE: the
-    // mem blocks — ~1.13 rows/node with riding embeddings — otherwise
-    // stay pinned long after the adjacency supersedes them).
-    buildGraphWithMem(e, dims0)._1
+    // the returned frame reads the membership checkpoint; callers that
+    // materialize the adjacency release it through a Materialize.scope
+    // (r17 ADVICE: the mem blocks, ~1.13 rows/node with riding
+    // embeddings, must not stay pinned once the adjacency supersedes
+    // them)
+    val dims = Similarity.dimsOf(e, dims0)
+    adjacency(membership(e), dims)
   }
 
-  /** [[buildGraph]] plus the layer-membership checkpoint it rides on,
-    * so callers that eagerly materialize the adjacency can unpersist
-    * the membership blocks immediately ([[Par.unpersistCheckpointed]]).
-    */
-  private def buildGraphWithMem(e: DataFrame,
-      dims0: Int = -1): (DataFrame, DataFrame) = {
-    val spark = e.sparkSession
-    import spark.implicits._
-    val dims = Similarity.dimsOf(e, dims0)
+  private def membership(e: DataFrame): DataFrame = {
     val base = Par.ensure(e).select(col("vec_id"), col("embedding"))
       .withColumn("__lvl", levelCol(col("vec_id")))
     // membership: a node appears at layers 0..lvl. MATERIALIZED once
@@ -175,9 +167,11 @@ object Hnsw {
     // riding embeddings vs ~1.13 rows per node), so the storage class
     // is already paid for. Same rows, bit-identical adjacency
     // (HnswSpec determinism pin).
-    val mem = base.withColumn("layer",
-      explode(sequence(lit(0), col("__lvl")))).drop("__lvl")
-      .localCheckpoint(true)
+    Materialize.cut(base.withColumn("layer",
+      explode(sequence(lit(0), col("__lvl")))).drop("__lvl"))
+  }
+
+  private def adjacency(mem: DataFrame, dims: Int): DataFrame = {
     // layer 0 holds every node, so the plane-sizing count reads the
     // materialized membership instead of a second corpus scan
     val n = mem.filter(col("layer") === 0).count()
@@ -232,14 +226,13 @@ object Hnsw {
     val ringScored = ringE
       .withColumn("cos", round(Vectors.cosine(col("se"), col("de")), 6))
       .select(col("layer"), col("src"), col("dst"), col("cos"), col("de"))
-    val adj = lshTop.select(col("layer"), col("src"), col("dst"),
+    lshTop.select(col("layer"), col("src"), col("dst"),
         col("cos"), col("de"))
       .unionByName(ringScored)
       // a ring edge may also be an LSH survivor — keep one
       .groupBy(col("layer"), col("src"), col("dst"))
       .agg(max(col("cos")).as("cos"), first(col("de")).as("de"))
       .select(col("layer"), col("src"), col("dst"), col("cos"), col("de"))
-    (adj, mem)
   }
 
   /** The global entry point: the max-(level, hash, id) node — one
@@ -353,19 +346,11 @@ object Hnsw {
     * top-k of the layer-0 beam, self excluded.
     */
   def annHnswSearch(e: DataFrame, nQueries: Int = 10, k: Int = 5,
-      dims0: Int = -1): DataFrame = {
-    val (adj0, mem) = buildGraphWithMem(e, dims0)
-    val adj = adj0
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      searchAdj(e, adj, entryPoint(e), nQueries, k)
-        .localCheckpoint(eager = true) // survive adj.unpersist below
-    } finally {
-      adj.unpersist(blocking = false)
-      // the search's result is eagerly checkpointed and the adjacency
-      // cache is dropped — nothing re-reads the membership blocks
-      Par.unpersistCheckpointed(mem)
-    }
+      dims0: Int = -1): DataFrame = Materialize.scope {
+    // the result is an eager cut, so the scope releases the adjacency
+    // cache and the membership blocks under it
+    val adj = Materialize.cache(buildGraph(e, dims0))
+    Materialize.cut(searchAdj(e, adj, entryPoint(e), nQueries, k))
   }
 
   private def searchAdj(e: DataFrame, adj: DataFrame, entry: Long,
@@ -409,18 +394,10 @@ object Hnsw {
     */
   def annHnswSearchFiltered(e: DataFrame, pred: Column,
       nQueries: Int = 10, k: Int = 5, dims0: Int = -1,
-      selectivity: Double = 0.5): DataFrame = {
-    val (adj0, mem) = buildGraphWithMem(e, dims0)
-    val adj = adj0
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      searchAdjFiltered(e, adj, entryPoint(e), nQueries, k, pred,
-          selectivity)
-        .localCheckpoint(eager = true)
-    } finally {
-      adj.unpersist(blocking = false)
-      Par.unpersistCheckpointed(mem)
-    }
+      selectivity: Double = 0.5): DataFrame = Materialize.scope {
+    val adj = Materialize.cache(buildGraph(e, dims0))
+    Materialize.cut(searchAdjFiltered(e, adj, entryPoint(e), nQueries, k,
+      pred, selectivity))
   }
 
   private def searchAdjFiltered(e: DataFrame, adj: DataFrame,
@@ -455,7 +432,7 @@ object Hnsw {
     * at a MOVING lane because the memo stayed pinned for the ~170
     * suite lanes AFTER the ann block — a lane-scoped cache must be
     * releasable, so [[releaseGraphCache]] unpersists the checkpointed
-    * RDD under the frame's LogicalRDD and the bench drops the memo
+    * RDD under the frame's LogicalRDD and the lane runner drops the memo
     * the moment the lane family is done.
     */
   private val graphCache =
@@ -474,13 +451,11 @@ object Hnsw {
     val e = graft.sources.Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding"))
     val (adj, entry) = graphCache.computeIfAbsent((spark, dir), _ => {
-      val (adj0, mem) = buildGraphWithMem(e, dims0 = 64)
-      val ck = adj0.localCheckpoint(eager = true)
-      // the adjacency is now materialized as its own blocks — the
-      // membership blocks under it are dead weight (r17 ADVICE:
-      // cachedGraphFor's ck plan holds only the outer LogicalRDD, so
-      // releaseGraphCache could never reach them)
-      Par.unpersistCheckpointed(mem)
+      // the adjacency is materialized as its own blocks: the scope
+      // releases the membership blocks under it (r17 ADVICE: ck's plan
+      // holds only the outer LogicalRDD, so releaseGraphCache could
+      // never reach them); the memo owns ck
+      val ck = Materialize.owned(Materialize.cut(buildGraph(e, dims0 = 64)))
       // name the checkpointed RDD so block ownership is readable in
       // the UI/getPersistentRDDs and spec-assertable after release
       ck.queryExecution.analyzed.foreach {
@@ -500,26 +475,20 @@ object Hnsw {
     * LogicalRDD). The memo exists to share one build across the
     * consecutive `ann_hnsw*` lanes; after them it is dead weight —
     * GB-scale at a 100× corpus — pinned against every later lane's
-    * execution memory. The bench calls this as soon as the lane
-    * family is done; the next `searchLane` call simply rebuilds.
+    * execution memory. `graft.LaneRunner` calls this as soon as the
+    * lane family is done; the next `searchLane` call simply rebuilds.
     */
-  def releaseGraphCache(spark: SparkSession): Unit = {
-    val it = graphCache.entrySet().iterator()
-    while (it.hasNext) {
-      val ent = it.next()
-      if (ent.getKey._1 eq spark) {
-        Par.unpersistCheckpointed(ent.getValue._1)
-        it.remove()
-      }
+  def releaseGraphCache(spark: SparkSession): Unit =
+    graphCache.entrySet().removeIf { ent =>
+      (ent.getKey._1 eq spark) && { Materialize.release(ent.getValue._1); true }
     }
-  }
 
   /** Memo size, for specs. */
   private[graft] def graphCacheSize: Int = graphCache.size()
 
   /** Force the shared lane-graph memo for `dir` (no-op when already
-    * built). The bench calls this ONCE, timed, when it reaches the
-    * `ann_hnsw*` family and reports it as `hnsw_build_sec` — charging
+    * built). `graft.LaneRunner` calls this once when it reaches the
+    * `ann_hnsw*` family; the bench times it as `hnsw_build_sec` — charging
     * the build to its own artifact field instead of whichever family
     * lane happens to run first, so per-lane family numbers compare
     * across rounds (r15 showed the memo landing on different lanes
@@ -557,11 +526,12 @@ object Hnsw {
     * count). Embeddings ride the adjacency, so a probe needs NO
     * separate corpus frame.
     */
-  def writeHnswIndex(e: DataFrame, path: String, dims0: Int = -1): Unit = {
-    val spark = e.sparkSession
+  def writeHnswIndex(e: DataFrame, path: String, dims0: Int = -1): Unit =
+      Materialize.scope {
     invalidateProbeCache(path)
-    val (adjW, memW) = buildGraphWithMem(e, dims0)
-    adjW
+    val dims = Similarity.dimsOf(e, dims0)
+    val mem = membership(e)
+    adjacency(mem, dims)
       .repartition(col("layer"))
       // src-sorted within each layer file: the probe's per-hop
       // src.isin(frontier) pushes to parquet, and sorted src gives the
@@ -572,12 +542,10 @@ object Hnsw {
       .write.mode("overwrite").partitionBy("layer").parquet(s"$path/adj")
     // the NODES catalog IS the layer membership the build already
     // materialized — read its blocks instead of a second corpus
-    // scan + explode, then release them (both writes are done)
-    try {
-      memW.select(col("layer"), col("vec_id"), col("embedding"))
-        .repartition(col("layer"))
-        .write.mode("overwrite").partitionBy("layer").parquet(s"$path/nodes")
-    } finally Par.unpersistCheckpointed(memW)
+    // scan + explode; the scope releases them once both writes are done
+    mem.select(col("layer"), col("vec_id"), col("embedding"))
+      .repartition(col("layer"))
+      .write.mode("overwrite").partitionBy("layer").parquet(s"$path/nodes")
     val entry = entryPoint(e)
     Similarity.writeSmall(e.filter(col("vec_id") === entry)
       .select(col("vec_id").as("entry"),

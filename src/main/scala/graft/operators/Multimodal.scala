@@ -234,10 +234,9 @@ object Multimodal {
     // filter — the whole expression is visible verbatim in the plan's
     // Filter node. The checkpoint is 16 bytes/row; measured 100×:
     // the lane's candidate join dropped from ~26 s to the cost of one
-    // signature pass. Blocks are GC-released with the lane's frame.
+    // signature pass.
     Dedup.signaturePairs(
-      base.select(col("doc_id"), nib.reduce(_ + _).as("sig"))
-        .localCheckpoint(true),
+      Materialize.cut(base.select(col("doc_id"), nib.reduce(_ + _).as("sig"))),
       maxDist, 4 * blocks)
   }
 

@@ -32,18 +32,6 @@ import org.apache.spark.sql.functions.{col, explode, split}
   */
 private[graft] object Par {
 
-  /** Unpersist the checkpointed RDD under a localCheckpointed frame
-    * (its analyzed plan is a LogicalRDD over the persisted RDD). Only
-    * call once the frame's blocks have been fully consumed by an
-    * EAGER successor — a localCheckpoint cannot recompute.
-    */
-  def unpersistCheckpointed(df: DataFrame): Unit =
-    df.queryExecution.analyzed.foreach {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        l.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
-
   def ensure(df: DataFrame): DataFrame = {
     // Streaming plans can't be asked for an RDD (and micro-batch
     // sources size their own partitions) — pass them through.

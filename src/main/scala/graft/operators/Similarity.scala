@@ -612,56 +612,54 @@ object Similarity {
     * probe reads only nprobe lists.
     */
   def ivfTrain(e: DataFrame, nlist: Int = 16, iters: Int = 3,
-      dims0: Int = -1, trainPerList: Int = 256): DataFrame = {
+      dims0: Int = -1, trainPerList: Int = 256): DataFrame = Materialize.scope {
     // Lloyd iterations re-scan the corpus iters+1 times: cache it for
-    // the duration (MEMORY_AND_DISK — spills, never recomputes the
-    // upstream lineage per iteration).
-    val cached = e.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val dims = dimsOf(cached, dims0)
-      // SAMPLED training (the FAISS discipline: ~256 points per
-      // centroid suffice for a coarse quantizer): Lloyd's per-pass
-      // cost is O(rows × nlist × dims), and with the derived
-      // nlist ≈ n/2000 a FULL-corpus train is O(n²) — the measured
-      // 300× semantic-inc build quadrupled on exactly this. The
-      // train set is a deterministic xxhash64-rate subset capped at
-      // trainPerList×nlist rows; the FULL corpus is still assigned
-      // by every caller afterwards (one O(n·nlist) pass — the
-      // irreducible part). Inactive (rate = 100%) whenever the
-      // corpus is already ≤ the cap — all oracle/spec scales train
-      // on everything, bit-identically to the pre-r11 code. Pass
-      // trainPerList <= 0 to force full-corpus training.
-      val train = if (trainPerList <= 0) cached else {
-        val n = cached.count()
-        val cap = trainPerList.toLong * nlist
-        if (n <= cap) cached
-        else cached.filter(
-          pmod(xxhash64(col("vec_id")), lit(65536L)) <
-            lit(math.ceil(65536.0 * cap / n).toLong))
-      }
-      var centroids: Array[(Int, Array[Double])] = train
-        .withColumn("__h", xxhash64(col("vec_id")))
-        .orderBy(col("__h")).limit(nlist)
-        .select(col("embedding").cast("array<double>")).collect()
-        .zipWithIndex
-        .map { case (r, i) => (i, r.getSeq[Double](0).toArray) }
-      var it = 0
-      while (it < iters) {
-        val cb = centroids
-        val assigned = assignToNearest(train, cb)
-        val dimCols = (0 until dims).map(d =>
-          avg(element_at(col("embedding").cast("array<double>"), d + 1))
-            .as(s"c_$d"))
-        centroids = assigned.groupBy(col("list"))
-          .agg(dimCols.head, dimCols.tail: _*)
-          .collect()
-          .map(r => (r.getInt(0), (0 until dims).map(d =>
-            r.getDouble(d + 1)).toArray))
-        it += 1
-      }
-      val rows = centroids.map { case (i, c) => (i, c.toSeq) }.toSeq
-      e.sparkSession.createDataFrame(rows).toDF("list", "centroid")
-    } finally cached.unpersist(blocking = false)
+    // the duration (spills, never recomputes the upstream lineage per
+    // iteration).
+    val cached = Materialize.cache(e)
+    val dims = dimsOf(cached, dims0)
+    // SAMPLED training (the FAISS discipline: ~256 points per
+    // centroid suffice for a coarse quantizer): Lloyd's per-pass
+    // cost is O(rows × nlist × dims), and with the derived
+    // nlist ≈ n/2000 a FULL-corpus train is O(n²) — the measured
+    // 300× semantic-inc build quadrupled on exactly this. The
+    // train set is a deterministic xxhash64-rate subset capped at
+    // trainPerList×nlist rows; the FULL corpus is still assigned
+    // by every caller afterwards (one O(n·nlist) pass — the
+    // irreducible part). Inactive (rate = 100%) whenever the
+    // corpus is already ≤ the cap — all oracle/spec scales train
+    // on everything, bit-identically to the pre-r11 code. Pass
+    // trainPerList <= 0 to force full-corpus training.
+    val train = if (trainPerList <= 0) cached else {
+      val n = cached.count()
+      val cap = trainPerList.toLong * nlist
+      if (n <= cap) cached
+      else cached.filter(
+        pmod(xxhash64(col("vec_id")), lit(65536L)) <
+          lit(math.ceil(65536.0 * cap / n).toLong))
+    }
+    var centroids: Array[(Int, Array[Double])] = train
+      .withColumn("__h", xxhash64(col("vec_id")))
+      .orderBy(col("__h")).limit(nlist)
+      .select(col("embedding").cast("array<double>")).collect()
+      .zipWithIndex
+      .map { case (r, i) => (i, r.getSeq[Double](0).toArray) }
+    var it = 0
+    while (it < iters) {
+      val cb = centroids
+      val assigned = assignToNearest(train, cb)
+      val dimCols = (0 until dims).map(d =>
+        avg(element_at(col("embedding").cast("array<double>"), d + 1))
+          .as(s"c_$d"))
+      centroids = assigned.groupBy(col("list"))
+        .agg(dimCols.head, dimCols.tail: _*)
+        .collect()
+        .map(r => (r.getInt(0), (0 until dims).map(d =>
+          r.getDouble(d + 1)).toArray))
+      it += 1
+    }
+    val rows = centroids.map { case (i, c) => (i, c.toSeq) }.toSeq
+    e.sparkSession.createDataFrame(rows).toDF("list", "centroid")
   }
 
   /** Product-quantization codebooks: split the dims into `m`
@@ -679,7 +677,7 @@ object Similarity {
     * Returns (sub, code, centroid) — m·ksub rows, driver-bounded.
     */
   def pqTrain(e: DataFrame, m: Int = 8, ksub: Int = 16, iters: Int = 3,
-      dims0: Int = -1): Array[(Int, Int, Array[Double])] = {
+      dims0: Int = -1): Array[(Int, Int, Array[Double])] = Materialize.scope {
     val dims = dimsOf(e, dims0)
     require(dims % m == 0, s"dims $dims must divide into $m subspaces")
     val dsub = dims / m
@@ -694,44 +692,41 @@ object Similarity {
     // over THIS frame's partitioning (it is persisted), so a
     // split-starved scan serializes all of training — the
     // scan-starvation fix (no-op on ample splits)
-    val sliced = Par.ensure(e).select(col("vec_id"),
+    val sliced = Materialize.cache(Par.ensure(e).select(col("vec_id"),
         posexplode(array((0 until m).map(s =>
           slice(ed, s * dsub + 1, dsub)): _*)))
-      .withColumnRenamed("pos", "sub").withColumnRenamed("col", "x")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val w = Window.partitionBy(col("sub"))
-        .orderBy(xxhash64(col("vec_id"), col("sub")), col("vec_id"))
-      var cents: Array[(Int, Int, Array[Double])] = sliced
-        .withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") <= ksub)
-        .select(col("sub"), col("__rn"), col("x")).collect()
-        .map(r => (r.getInt(0), r.getInt(1) - 1, r.getSeq[Double](2).toArray))
-      require(cents.nonEmpty, "pqTrain: empty corpus")
-      var it = 0
-      while (it < iters) {
-        // per-sub argmin via the native PqArgmin expression — the
-        // codebook rides the generated code as a reference object, so
-        // bytecode size is constant in m·ksub (the r8 when-chain of
-        // least-over-structs blew janino's method limit at the search
-        // lane's m=16/ksub=32 and dropped the stage to interpreted)
-        val code = pqArgminCol(col("sub"), col("x"), centsCube(cents, m))
-          .getField("code")
-        val dimCols = (0 until dsub).map(d =>
-          avg(element_at(col("x"), d + 1)).as(s"c_$d"))
-        val updated = sliced.withColumn("__code", code)
-          .groupBy(col("sub"), col("__code"))
-          .agg(dimCols.head, dimCols.tail: _*)
-          .collect()
-          .map(r => ((r.getInt(0), r.getInt(1)), (0 until dsub).map(d =>
-            r.getDouble(d + 2)).toArray)).toMap
-        // empty cells keep their previous centroid (standard Lloyd)
-        cents = cents.map { case (s, i, c) =>
-          (s, i, updated.getOrElse((s, i), c)) }
-        it += 1
-      }
-      cents
-    } finally sliced.unpersist(blocking = false)
+      .withColumnRenamed("pos", "sub").withColumnRenamed("col", "x"))
+    val w = Window.partitionBy(col("sub"))
+      .orderBy(xxhash64(col("vec_id"), col("sub")), col("vec_id"))
+    var cents: Array[(Int, Int, Array[Double])] = sliced
+      .withColumn("__rn", row_number().over(w))
+      .filter(col("__rn") <= ksub)
+      .select(col("sub"), col("__rn"), col("x")).collect()
+      .map(r => (r.getInt(0), r.getInt(1) - 1, r.getSeq[Double](2).toArray))
+    require(cents.nonEmpty, "pqTrain: empty corpus")
+    var it = 0
+    while (it < iters) {
+      // per-sub argmin via the native PqArgmin expression — the
+      // codebook rides the generated code as a reference object, so
+      // bytecode size is constant in m·ksub (the r8 when-chain of
+      // least-over-structs blew janino's method limit at the search
+      // lane's m=16/ksub=32 and dropped the stage to interpreted)
+      val code = pqArgminCol(col("sub"), col("x"), centsCube(cents, m))
+        .getField("code")
+      val dimCols = (0 until dsub).map(d =>
+        avg(element_at(col("x"), d + 1)).as(s"c_$d"))
+      val updated = sliced.withColumn("__code", code)
+        .groupBy(col("sub"), col("__code"))
+        .agg(dimCols.head, dimCols.tail: _*)
+        .collect()
+        .map(r => ((r.getInt(0), r.getInt(1)), (0 until dsub).map(d =>
+          r.getDouble(d + 2)).toArray)).toMap
+      // empty cells keep their previous centroid (standard Lloyd)
+      cents = cents.map { case (s, i, c) =>
+        (s, i, updated.getOrElse((s, i), c)) }
+      it += 1
+    }
+    cents
   }
 
   /** Pack a (sub, code, centroid) codebook into the dense
@@ -1291,11 +1286,10 @@ object Similarity {
       pruneLists: Boolean = true): DataFrame = {
     val spark = delta.sparkSession
     val cents = readCentroids(spark, path)
-    // eager localCheckpoint (default): the assignment feeds three
-    // consumers (probed-list collect, pair join, final tag) —
-    // materialize once, truncate lineage; blocks release with the
-    // frame (the labelPropagation discipline, no session-lifetime
-    // cache entry). `checkpointDelta = false` is for callers whose
+    // eager cut (default): the assignment feeds three consumers
+    // (probed-list collect, pair join, final tag) — materialize once,
+    // truncate lineage; the returned frame reads the blocks, so they
+    // stay pinned until it is consumed. `checkpointDelta = false` is for callers whose
     // "delta" is CORPUS-sized ([[semanticDecontaminate]]): writing
     // the whole corpus to executor-local storage would trade three
     // cheap projection re-scans for an O(corpus) disk write — there
@@ -1304,7 +1298,7 @@ object Similarity {
       .select(col("vec_id"), col("embedding"), col("list"),
         Vectors.norm2(col("embedding")).as("nrm"))
     val assigned =
-      if (checkpointDelta) assignedBase.localCheckpoint(true)
+      if (checkpointDelta) Materialize.cut(assignedBase)
       else assignedBase
     // the probed-list set is bounded by nlist — collect is the same
     // bounded-driver-state class as the centroid table itself.
@@ -1346,7 +1340,10 @@ object Similarity {
     * it). Rows-checked (no_oracle: k-means FP in the coarse
     * assignment); the 1.0 floor is spec'd (SimilaritySpec).
     */
-  def semanticDeltaEffect(spark: SparkSession, dir: String): DataFrame = {
+  def semanticDeltaEffect(spark: SparkSession, dir: String): DataFrame =
+      Materialize.scope {
+    // one summary row, computed eagerly: the scope releases the probe's
+    // delta checkpoint before the call returns
     val e = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding"))
     val corpus = e.filter(col("vec_id") >= 20L)
@@ -2146,7 +2143,7 @@ object Similarity {
   def annIvfPqSearchFiltered(e: DataFrame, pred: Column,
       nQueries: Int = 10, k: Int = 5, nlist: Int = 16, nprobe: Int = 10,
       m: Int = 16, ksub: Int = 64, rerank: Int = 50,
-      dims0: Int = -1): DataFrame = {
+      dims0: Int = -1): DataFrame = Materialize.scope {
     val spark = e.sparkSession
     val dims = dimsOf(e, dims0)
     val dsub = dims / m
@@ -2157,43 +2154,40 @@ object Similarity {
     // and again under the encode that feeds ADC scoring. The cache is
     // scoped to this call: the ADC shortlist below is eagerly
     // materialized (bounded nQueries×max(k,rerank) rows), after which
-    // the assignment is unpersisted — nothing outlives the invocation,
+    // the assignment is released — nothing outlives the invocation,
     // every invocation recomputes from parquet.
-    val assigned = assignToNearest(Par.ensure(e), centroids)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val centLookup = centLookupFrame(spark, centroids)
-      val books = pqTrain(residualFrame(assigned, centLookup, dims),
-        m, ksub, dims0 = dims)
-      val centFrame = ivfPqCentFrame(spark, centroids, books, m, ksub, dsub)
-      val codes = ivfPqEncode(assigned.where(pred), centFrame, books, dims)
-        .select(col("vec_id").as("neighbor_id"), col("list"),
-          col("codes"), col("rnorm"))
-      val qs = queryVectors(e, nQueries)
-      // per-(query, probed list) rows: the m×ksub residual dot table
-      // rides each row (nQueries×nprobe×m×ksub doubles — bounded),
-      // q·c_list is a driver-computed scalar
-      val probeRows = probeLists(spark, centroids, qs, nprobe).flatMap {
-        case (qid, q, lists) =>
-          val qn = math.sqrt(q.map(x => x * x).sum)
-          val dt = dotTable(books, m, ksub, dsub, q.toIndexedSeq)
-          val qDotC = centDots(centroids, q)
-          lists.map(l => (qid, l, dt, qn, qDotC(l)))
-      }
-      val queries = broadcast(spark.createDataFrame(probeRows)
-        .toDF("query_id", "list", "dt", "qn", "qcl"))
-      val scored = codes.join(queries, Seq("list"))
-        .filter(col("neighbor_id") =!= col("query_id"))
-        .select(col("query_id"), col("neighbor_id"),
-          round((col("qcl") + dtSumCol(col("dt"), m)) /
-            (col("qn") * col("rnorm")), 6).as("adc_cos"))
-      // eager, driver-bounded (nQueries×max(k, rerank) rows): pins the
-      // shortlist so the cached assignment can be released before the
-      // lazy refine tail executes
-      val adcTopN = topKPerQuery(scored, "adc_cos", math.max(k, rerank))
-        .localCheckpoint(true)
-      if (rerank <= 0) adcTopN else refineShortlist(e, adcTopN, qs, k)
-    } finally assigned.unpersist(blocking = false)
+    val assigned = Materialize.cache(assignToNearest(Par.ensure(e), centroids))
+    val centLookup = centLookupFrame(spark, centroids)
+    val books = pqTrain(residualFrame(assigned, centLookup, dims),
+      m, ksub, dims0 = dims)
+    val centFrame = ivfPqCentFrame(spark, centroids, books, m, ksub, dsub)
+    val codes = ivfPqEncode(assigned.where(pred), centFrame, books, dims)
+      .select(col("vec_id").as("neighbor_id"), col("list"),
+        col("codes"), col("rnorm"))
+    val qs = queryVectors(e, nQueries)
+    // per-(query, probed list) rows: the m×ksub residual dot table
+    // rides each row (nQueries×nprobe×m×ksub doubles — bounded),
+    // q·c_list is a driver-computed scalar
+    val probeRows = probeLists(spark, centroids, qs, nprobe).flatMap {
+      case (qid, q, lists) =>
+        val qn = math.sqrt(q.map(x => x * x).sum)
+        val dt = dotTable(books, m, ksub, dsub, q.toIndexedSeq)
+        val qDotC = centDots(centroids, q)
+        lists.map(l => (qid, l, dt, qn, qDotC(l)))
+    }
+    val queries = broadcast(spark.createDataFrame(probeRows)
+      .toDF("query_id", "list", "dt", "qn", "qcl"))
+    val scored = codes.join(queries, Seq("list"))
+      .filter(col("neighbor_id") =!= col("query_id"))
+      .select(col("query_id"), col("neighbor_id"),
+        round((col("qcl") + dtSumCol(col("dt"), m)) /
+          (col("qn") * col("rnorm")), 6).as("adc_cos"))
+    // eager, driver-bounded (nQueries×max(k, rerank) rows): pins the
+    // shortlist so the cached assignment can be released before the
+    // lazy refine tail executes
+    val adcTopN = Materialize.cut(
+      topKPerQuery(scored, "adc_cos", math.max(k, rerank)))
+    if (rerank <= 0) adcTopN else refineShortlist(e, adcTopN, qs, k)
   }
 
   /** Persist an IVF-PQ index: residual codes + reconstruction norms
@@ -3031,58 +3025,56 @@ object Similarity {
     * carry association-order FP like every mean/centroid in this file
     * → no_oracle driver lane, planted-direction recovery spec'd.
     */
-  def pc1(e: DataFrame, dims0: Int = -1, iters: Int = 4): Pc1 = {
+  def pc1(e: DataFrame, dims0: Int = -1, iters: Int = 4): Pc1 = Materialize.scope {
     val dims = dimsOf(e, dims0)
-    val emb = e.select(col("embedding").cast("array<double>").as("x"))
-      .cache()
-    try {
-      // one stats pass: n, length uniformity, E‖x‖². The per-dim-sum
-      // formulation below is only correct when every dim group holds
-      // every row exactly once — a ragged corpus (mixed-dims append,
-      // null-padded rows) would silently skew the mean correction and
-      // make totalVariance inconsistent with the dims-confined
-      // direction, so non-uniform lengths are an ERROR, not a skew
-      val stats = emb.agg(count(lit(1)).as("n"),
-          min(size(col("x"))).as("lo"), max(size(col("x"))).as("hi"),
-          sum(Vectors.dot(col("x"), col("x"))).as("ssq"))
-        .head
-      val n = stats.getLong(0)
-      require(n > 0, "pc1: empty embedding set")
-      require(stats.getInt(1) == dims && stats.getInt(2) == dims,
-        s"pc1: ragged embeddings — array lengths span " +
-          s"[${stats.getInt(1)}, ${stats.getInt(2)}] but the direction " +
-          s"is computed over dims=$dims; uniform length is required")
-      val sums = emb.select(posexplode(col("x")).as(Seq("d", "xv")))
-        .groupBy(col("d")).agg(sum(col("xv")).as("s"))
-        .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
-      val mean = Array.tabulate(dims)(d => sums.getOrElse(d, 0.0) / n)
-      // total variance = E‖x‖² − ‖μ‖² (rode the stats pass)
-      val e2 = stats.getDouble(3) / n
-      val totVar = e2 - mean.map(m => m * m).sum
-      var v = Array.fill(dims)(1.0 / math.sqrt(dims))
-      var lambda = 0.0
-      for (_ <- 1 to iters) {
-        val vLit = typedLit(v.toSeq)
-        val muV = mean.zip(v).map { case (m, w) => m * w }.sum
-        val s = Vectors.dot(col("x"), vLit) - lit(muV)
-        val agg = emb.select(col("x"), s.as("s"))
-          .select(posexplode(col("x")).as(Seq("d", "xv")), col("s"))
-          .groupBy(col("d"))
-          .agg(sum(col("xv") * col("s")).as("num"), sum(col("s")).as("ssum"))
-          .collect()
-        val sTot = if (agg.isEmpty) 0.0 else agg.head.getDouble(2)
-        val raw = Array.tabulate(dims) { d =>
-          val row = agg.find(_.getInt(0) == d)
-          row.map(_.getDouble(1)).getOrElse(0.0) - sTot * mean(d)
-        }
-        val nrm = math.sqrt(raw.map(x => x * x).sum)
-        require(nrm > 1e-12, "pc1: degenerate direction (zero variance?)")
-        v = raw.map(_ / nrm)
-        // Rayleigh quotient: λ = ‖Σ sᵢ(xᵢ−μ)‖ / n at unit v
-        lambda = nrm / n
+    val emb = Materialize.cache(
+      e.select(col("embedding").cast("array<double>").as("x")))
+    // one stats pass: n, length uniformity, E‖x‖². The per-dim-sum
+    // formulation below is only correct when every dim group holds
+    // every row exactly once — a ragged corpus (mixed-dims append,
+    // null-padded rows) would silently skew the mean correction and
+    // make totalVariance inconsistent with the dims-confined
+    // direction, so non-uniform lengths are an ERROR, not a skew
+    val stats = emb.agg(count(lit(1)).as("n"),
+        min(size(col("x"))).as("lo"), max(size(col("x"))).as("hi"),
+        sum(Vectors.dot(col("x"), col("x"))).as("ssq"))
+      .head
+    val n = stats.getLong(0)
+    require(n > 0, "pc1: empty embedding set")
+    require(stats.getInt(1) == dims && stats.getInt(2) == dims,
+      s"pc1: ragged embeddings — array lengths span " +
+        s"[${stats.getInt(1)}, ${stats.getInt(2)}] but the direction " +
+        s"is computed over dims=$dims; uniform length is required")
+    val sums = emb.select(posexplode(col("x")).as(Seq("d", "xv")))
+      .groupBy(col("d")).agg(sum(col("xv")).as("s"))
+      .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
+    val mean = Array.tabulate(dims)(d => sums.getOrElse(d, 0.0) / n)
+    // total variance = E‖x‖² − ‖μ‖² (rode the stats pass)
+    val e2 = stats.getDouble(3) / n
+    val totVar = e2 - mean.map(m => m * m).sum
+    var v = Array.fill(dims)(1.0 / math.sqrt(dims))
+    var lambda = 0.0
+    for (_ <- 1 to iters) {
+      val vLit = typedLit(v.toSeq)
+      val muV = mean.zip(v).map { case (m, w) => m * w }.sum
+      val s = Vectors.dot(col("x"), vLit) - lit(muV)
+      val agg = emb.select(col("x"), s.as("s"))
+        .select(posexplode(col("x")).as(Seq("d", "xv")), col("s"))
+        .groupBy(col("d"))
+        .agg(sum(col("xv") * col("s")).as("num"), sum(col("s")).as("ssum"))
+        .collect()
+      val sTot = if (agg.isEmpty) 0.0 else agg.head.getDouble(2)
+      val raw = Array.tabulate(dims) { d =>
+        val row = agg.find(_.getInt(0) == d)
+        row.map(_.getDouble(1)).getOrElse(0.0) - sTot * mean(d)
       }
-      Pc1(v, lambda, totVar, n)
-    } finally emb.unpersist()
+      val nrm = math.sqrt(raw.map(x => x * x).sum)
+      require(nrm > 1e-12, "pc1: degenerate direction (zero variance?)")
+      v = raw.map(_ / nrm)
+      // Rayleigh quotient: λ = ‖Σ sᵢ(xᵢ−μ)‖ / n at unit v
+      lambda = nrm / n
+    }
+    Pc1(v, lambda, totVar, n)
   }
 
   /** Driver contract `embed_pca`: ONE summary row — n, the dominant

@@ -55,8 +55,8 @@ object Skyline {
     // the whole prefilter — the corpus would scan twice per side. With
     // it, the frontier-sized survivor set materializes once and the
     // pairwise pass reads only it.
-    val survivors = skylineSurvivors(clean, costCol, gainCol, nBins)
-      .localCheckpoint(eager = false)
+    val survivors = Materialize.cut(
+      skylineSurvivors(clean, costCol, gainCol, nBins), eager = false)
     val q = survivors.select(col(costCol).as("__qc"), col(gainCol).as("__qg"))
     survivors.join(broadcast(q),
       col("__qc") <= col(costCol) && col("__qg") >= col(gainCol) &&

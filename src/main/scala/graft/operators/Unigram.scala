@@ -186,13 +186,13 @@ object Unigram {
     // the driver word collect (r18, guide §2.4): the lane otherwise
     // paid three corpus scans — the vocab collect plus the guard's
     // count + collect. Blocks released after the collect below.
-    val wcDf = Bpe.wordCounts(docs, textCol)
-      .select(col("word"), col("cnt")).localCheckpoint(true)
+    val wcDf = Materialize.cut(Bpe.wordCounts(docs, textCol)
+      .select(col("word"), col("cnt")))
     val (vocabRows, wc) = try {
       (unigramVocabFromCounts(wcDf, vocabSize, maxPieceLen).collect(),
         Bpe.collectVocabGuarded(wcDf, "encodeDocsUnigram",
           Bpe.MaxIncrementalVocabRows))
-    } finally Par.unpersistCheckpointed(wcDf)
+    } finally Materialize.release(wcDf)
     val costOf = vocabRows.map(r =>
       r.getString(1) -> ((r.getLong(0), r.getLong(3)))).toMap
     // The 16-codepoint cap is the ORACLE's CTE-unroll constraint, not
@@ -408,34 +408,6 @@ object Unigram {
     }
     val z = expected.asScala.values.sum
     (expected.asScala.toMap.map { case (p, v) => p -> v / z }, ll)
-  }
-
-  /** EM log-likelihood of the corpus under a piece-probability map —
-    * exposed for the monotonicity signal spec.
-    */
-  private[graft] def corpusLogLikelihood(wc: Array[(String, Long)],
-      ps: Map[String, Double], maxPieceLen: Int): Double = {
-    var ll = 0.0
-    wc.foreach { case (w, c) =>
-      val cps = cpSplit(w)
-      val n = cps.length
-      val alpha = new Array[Double](n + 1)
-      alpha(0) = 1.0
-      var j = 1
-      while (j <= n) {
-        var s = 0.0
-        var l = 1
-        while (l <= math.min(maxPieceLen, j)) {
-          val piece = cps.slice(j - l, j).mkString
-          ps.get(piece).foreach(p => s += alpha(j - l) * p)
-          l += 1
-        }
-        alpha(j) = s
-        j += 1
-      }
-      if (alpha(n) > 0.0) ll += c * math.log(alpha(n))
-    }
-    ll
   }
 
   // -----------------------------------------------------------------

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.operators.Materialize
+
 /** The LLM-data ingest chain END-TO-END on one stream — quality gate →
   * exact-novelty gate → segment-novelty gate → HNSW index ingest —
   * composed through one `foreachBatch` (the searchPipeline composition
@@ -65,7 +67,9 @@ object IngestPipeline {
     */
   def llmIngestBatch(batch: DataFrame, epoch: Long, base: String,
       indexPath: String, rules: Seq[(String, Column)],
-      window: Int = 10, dims0: Int = -1): Unit = {
+      window: Int = 10, dims0: Int = -1): Unit = Materialize.scope {
+    // the scope releases planBatch's catalog snapshots once both
+    // appends are written
     val (surviving, segAppend, docAppend) =
       planBatch(batch, epoch, base, rules, window)
     // 4. index ingest (its own by-id replay gate)
@@ -100,12 +104,10 @@ object IngestPipeline {
     // failed attempt) and the append-side dedup anti-joins
     // (epoch-unfiltered). Catalog rows are 16-byte hashes — the
     // checkpoint is the StreamNovelty catalog contract's bounded size.
-    val docCatAll = spark.read.parquet(s"$base/doc_catalog")
-      .select(col("text_hash"), col("epoch"))
-      .localCheckpoint(true)
-    val segCatAll = spark.read.parquet(s"$base/seg_catalog")
-      .select(col("seg_md5"), col("epoch"))
-      .localCheckpoint(true)
+    val docCatAll = Materialize.cut(spark.read.parquet(s"$base/doc_catalog")
+      .select(col("text_hash"), col("epoch")))
+    val segCatAll = Materialize.cut(spark.read.parquet(s"$base/seg_catalog")
+      .select(col("seg_md5"), col("epoch")))
     def catalog(snap: DataFrame): DataFrame =
       snap.filter(col("epoch") < epoch)
     // 1. quality

@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.operators.Similarity
+import graft.operators.{Materialize, Similarity}
 import graft.sources.Tables
 
 /** Dev-loop recall sweep for the approximate ANN lanes (IVF, PQ):
@@ -38,12 +38,10 @@ object AnnSweep {
     // spec floors were picked
     if (args.lift(1).contains("filtered")) {
       import org.apache.spark.sql.functions._
-      val e = Tables.embeddings(spark, dir)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val e = Materialize.cache(Tables.embeddings(spark, dir))
       val pred = pmod(xxhash64(col("vec_id")), lit(2L)) === 0
-      val exactF = Similarity.annBruteForceFiltered(e, pred,
-          nQueries = 10, k = 10)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val exactF = Materialize.cache(Similarity.annBruteForceFiltered(e, pred,
+          nQueries = 10, k = 10))
       exactF.count()
       def recallF(df: org.apache.spark.sql.DataFrame): Double =
         Similarity.annRecallSummary(df, exactF, k = 10)
@@ -63,14 +61,11 @@ object AnnSweep {
     // how the shipped composite operating point was picked
     if (args.lift(1).contains("ivfpq")) {
       import org.apache.spark.sql.functions._
-      val e = Tables.embeddings(spark, dir)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val e = Materialize.cache(Tables.embeddings(spark, dir))
       val pred = pmod(xxhash64(col("vec_id")), lit(2L)) === 0
-      val exact = Similarity.annBruteForce(e, nQueries = 10, k = 10)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val exactF = Similarity.annBruteForceFiltered(e, pred,
-          nQueries = 10, k = 10)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val exact = Materialize.cache(Similarity.annBruteForce(e, nQueries = 10, k = 10))
+      val exactF = Materialize.cache(Similarity.annBruteForceFiltered(e, pred,
+          nQueries = 10, k = 10))
       exact.count(); exactF.count()
       def recall(df: org.apache.spark.sql.DataFrame,
           ex: org.apache.spark.sql.DataFrame): Double =
@@ -86,10 +81,8 @@ object AnnSweep {
       println(f"IVFPQf nprobe=10 rerank=50  recall@10=$rf%.3f")
       spark.stop(); return
     }
-    val e = Tables.embeddings(spark, dir)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val exact = Similarity.annBruteForce(e, nQueries = 10, k = 10)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val e = Materialize.cache(Tables.embeddings(spark, dir))
+    val exact = Materialize.cache(Similarity.annBruteForce(e, nQueries = 10, k = 10))
     exact.count()
 
     def recall(df: org.apache.spark.sql.DataFrame): Double =
@@ -110,8 +103,7 @@ object AnnSweep {
     // pure-ADC levers (r9 VERDICT item 6): OPQ-lite rotation before
     // the subspace split, vs finer codebooks (larger m / ksub) at
     // rerank=0 — what lifts ADC-only recall, and at what bit cost
-    val rot = Similarity.rotateEmbeddings(e, dims0 = 64)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val rot = Materialize.cache(Similarity.rotateEmbeddings(e, dims0 = 64))
     for ((m, ksub) <- Seq((16, 32), (16, 64), (32, 32), (32, 64), (32, 128));
          src <- Seq("raw" -> e, "rot" -> rot)) {
       val r = recall(Similarity.annPqSearch(src._2, nQueries = 10, k = 10,

@@ -70,8 +70,7 @@ object BpeScale {
     spark.sparkContext.setLogLevel("ERROR")
     val docs =
       if (dir == "heaps") {
-        val d = heapsDocs(spark)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val d = graft.operators.Materialize.cache(heapsDocs(spark))
         d.count()
         d
       } else graft.sources.Tables.documents(spark, dir)

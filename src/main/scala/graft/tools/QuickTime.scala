@@ -27,15 +27,15 @@ object QuickTime {
       "graft-quicktime")
     spark.sparkContext.setLogLevel("ERROR")
     spark.range(2000000L).selectExpr("sum(id * 2)").collect()
-    names.foreach { name =>
-      val fn = graft.SparkEntry.queries(name)
+    graft.LaneRunner.inOrder(spark, dir,
+        names.map(name => name -> graft.SparkEntry.queries(name))) { (name, fn) =>
       val times = (1 to n).map { _ =>
         val m = graft.LaneMetrics.attach(spark)
-        val t0 = System.nanoTime()
-        fn(spark, dir).write.format("noop").mode("overwrite").save()
-        val t = (System.nanoTime() - t0) / 1e9
+        val r = graft.LaneRunner.run(spark, dir, fn)(
+          _.write.format("noop").mode("overwrite").save())
+        r.failure.foreach(throw _)
         println(s"QM $name ${m.detach().json}")
-        t
+        r.seconds
       }
       println(f"QT $name%-24s " +
         times.map(t => f"$t%.3f").mkString(" ") +

@@ -2,7 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.operators.{Packing, Profile, Segments}
+import graft.operators.{Materialize, Packing, Profile, Segments}
 import graft.sources.Tables
 
 /** Scale probe for the segment/packing/profile family (r6 VERDICT
@@ -58,10 +58,9 @@ object SegScale {
       val viral = (1 to 10).map(i => s"boilerplate$i").mkString(" ")
       val pad = repeat(lit(" pp"),
         pmod(lit(10) - pmod(size(split(col("text"), " ")), lit(10)), lit(10)))
-      val planted = docs.withColumn("text",
+      val planted = Materialize.cache(docs.withColumn("text",
         when(pmod(xxhash64(col("doc_id")), lit(10)) < 3,
-          concat(col("text"), pad, lit(" " + viral))).otherwise(col("text")))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          concat(col("text"), pad, lit(" " + viral))).otherwise(col("text"))))
       planted.count()
       results += time2("dedup_segment_planted", () =>
         Segments.segmentDedup(planted))
@@ -72,7 +71,7 @@ object SegScale {
         Segments.segmented(planted, 10))
       results += ("planted_viral_copies" -> keptViral.toDouble)
       survivors.count()
-      planted.unpersist(blocking = false)
+      Materialize.release(planted)
     }
 
     def fmt(v: Double) =

@@ -140,7 +140,7 @@ class HnswSpec extends GraftSpecBase {
     assert(Hnsw.graphCacheSize >= 1, "searchLane did not populate the memo")
     assert(memoRdds().nonEmpty, "memoized graph RDD not pinned/named")
     // release frees the memo entry AND its block storage for the
-    // session — the bench drops it the moment the lane family is done.
+    // session — the lane runner drops it the moment the family is done.
     // (The r17 descend keeps the beam ON THE DRIVER — no per-hop
     // checkpoint blocks exist; each hop's frontier-keys broadcast is
     // destroyed by ContextCleaner with the hop frame, so the named

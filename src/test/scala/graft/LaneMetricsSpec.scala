@@ -59,10 +59,10 @@ class LaneMetricsSpec extends GraftSpecBase {
       .select(col("word"), slice(col("arr"), lit(2), size(col("arr")) - 1).as("syms"))
     assert(measured(noop(syms.select(col("word"), posexplode(col("syms")))))
       .generateHeavy >= 1)
-    val ckpt = syms.localCheckpoint(true)
+    val ckpt = graft.operators.Materialize.cut(syms)
     try assert(measured(noop(ckpt.select(col("word"), posexplode(col("syms")))))
       .generateHeavy == 0)
-    finally graft.operators.Par.unpersistCheckpointed(ckpt)
+    finally graft.operators.Materialize.release(ckpt)
   }
 
   test("after detach a further query leaves the collector's counts unchanged") {
