@@ -671,8 +671,11 @@ object Bench {
     val hnswBuildJson =
       if (hnswBuildSec < 0) "null" else fmt(hnswBuildSec, 4)
     val cacheEntries = spark.conf.get("spark.sql.codegen.cache.maxEntries")
+    // in bytes; the conf reads a bare number as KiB
+    val blockSize = spark.sparkContext.getConf
+      .getSizeAsKb("spark.broadcast.blockSize", "4m") * 1024
     def line(qs: String, extra: String = "") =
-      s"""{"metric":"total","value":${fmt(total, 4)},"total_nonquadratic":${fmt(totalNonQuadratic, 4)},"quadratic_lanes":$quadraticJson,"hnsw_build_sec":$hnswBuildJson,"unit":"sec","nq":${results.size},"queries":$qs,"failed":$failedJson,"leaked":$leakedJson,"regressed":$regressedJson,"transient":$transientJson,"median_shift":${fmt(shift, 3)},"stream_rows_per_sec":${fmt(streamRps, 0)},"stream_rows_per_sec_stateful":${fmt(streamRpsStateful, 0)},"loadavg":${fmt(loadavg, 2)},"probe_ms":${fmt(probeMs, 1)},"probe_quiet_ms":${fmt(probeQuiet, 1)},"probe_par_ms":${fmt(probeParMs, 1)},"probe_par_quiet_ms":${fmt(probeParQuiet, 1)},"noisy":$noisy,"codegen_cache_entries":$cacheEntries,"full":"$artifact","sf":"$sfDir"$extra}"""
+      s"""{"metric":"total","value":${fmt(total, 4)},"total_nonquadratic":${fmt(totalNonQuadratic, 4)},"quadratic_lanes":$quadraticJson,"hnsw_build_sec":$hnswBuildJson,"unit":"sec","nq":${results.size},"queries":$qs,"failed":$failedJson,"leaked":$leakedJson,"regressed":$regressedJson,"transient":$transientJson,"median_shift":${fmt(shift, 3)},"stream_rows_per_sec":${fmt(streamRps, 0)},"stream_rows_per_sec_stateful":${fmt(streamRpsStateful, 0)},"loadavg":${fmt(loadavg, 2)},"probe_ms":${fmt(probeMs, 1)},"probe_quiet_ms":${fmt(probeQuiet, 1)},"probe_par_ms":${fmt(probeParMs, 1)},"probe_par_quiet_ms":${fmt(probeParQuiet, 1)},"noisy":$noisy,"codegen_cache_entries":$cacheEntries,"broadcast_block_size":$blockSize,"full":"$artifact","sf":"$sfDir"$extra}"""
     // Full map (4-decimal) to the file artifact; headline map
     // (3-decimal) to stdout, with a hard 1600-char guard: should
     // the headline set ever outgrow the tail budget, drop precision

@@ -18,7 +18,9 @@ import org.apache.spark.sql.SparkSession
   *  - `codegen.cache.maxEntries` = [[CodegenCacheEntries]]: every
   *    generated class the lane catalog needs stays compiled (see there);
   *  - `streaming.checkpointFileManagerClass` =
-  *    [[CheckpointFileManagerClass]]: checkpoint writes fork no process.
+  *    [[CheckpointFileManagerClass]]: checkpoint writes fork no process;
+  *  - `spark.broadcast.blockSize` = [[BroadcastBlockSize]]: a stage's
+  *    task binary is no humongous G1 object (see there).
   *
   * `local(n)` sizes `shuffle.partitions` to the core count (the 200
   * default just fragments a single-JVM run); cluster deploys should
@@ -62,6 +64,36 @@ object GraftSession {
   val CheckpointFileManagerClass: String =
     classOf[graft.streaming.LocalCheckpointFileManager].getName
 
+  /** Piece size of every torrent broadcast (`spark.broadcast.blockSize`,
+    * Spark default 4 MiB). Every Spark job broadcasts its task binary,
+    * and `TorrentBroadcast.blockifyObject` first allocates one whole
+    * piece, even for a binary of a few KiB. G1 treats an object of half
+    * a region or more as humongous; every heap over 2 GiB has regions
+    * of 2 MiB or more, so 512 KiB is the largest power of two that is
+    * never humongous there, while 4 MiB takes three 2 MiB regions. Dead
+    * at once, such a piece stays resident until the next young GC:
+    * with 4 MiB pieces, one 12 s perfbench run of the reference job
+    * allocated 165 of them (660 MiB), one `batch_2x` run 383; at
+    * 512 KiB its median peak RSS went 1426 → 1275 MiB (4 cores, 3 GiB
+    * heap).
+    *
+    * The trade-off: a large broadcast relation is cut into 8 times as
+    * many pieces, and each executor reports every piece it fetches to
+    * the driver's block manager. Larger pieces are humongous garbage on
+    * every stage.
+    *
+    * A Spark CORE conf: read once, when the SparkContext is created. A
+    * session built by hand (plus `GraftExtensions.register`), or any
+    * session on a SparkContext that already exists, keeps 4 MiB unless
+    * its SparkConf sets this itself.
+    */
+  val BroadcastBlockSize: Int = 512 << 10
+
+  /** [[BroadcastBlockSize]] as the conf's value: a bare number there
+    * means KiB, so the unit is spelled out.
+    */
+  private[graft] val BroadcastBlockSizeConf: String = s"${BroadcastBlockSize}b"
+
   /** Local cores every graft main runs with: `SPARK_GRAFT_CPUS`,
     * default 4. One default, so `Bench`, `Verify` and the tools time
     * a lane at the same `local[N]`.
@@ -80,6 +112,7 @@ object GraftSession {
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toLong)
       .config("spark.sql.streaming.checkpointFileManagerClass",
         CheckpointFileManagerClass)
+      .config("spark.broadcast.blockSize", BroadcastBlockSizeConf)
       .withExtensions(new GraftExtensions)
 
   /** Local session for tests/tools: `cores` threads, shuffle

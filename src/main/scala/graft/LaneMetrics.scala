@@ -1,6 +1,7 @@
 package graft
 
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
 import org.apache.spark.scheduler._
@@ -24,10 +25,11 @@ import org.apache.spark.sql.graftbridge.ColumnBridge
   * lane run and detach after it. Not installed by [[GraftSession]] or
   * [[GraftExtensions]], so other sessions never carry it.
   *
-  * Task events give jobs, stages, tasks, shuffle, spill, peak
-  * execution memory and task-time skew. Each finished SQL execution's
-  * final (adaptive) plan gives exchanges, join strategies, operators
-  * outside whole-stage codegen and heavy generators, plus the map from
+  * Task events give jobs, stages, tasks, task CPU time, shuffle, spill,
+  * peak execution memory and task-time skew; the JVM's collectors give
+  * the run's GC time. Each finished SQL execution's final (adaptive)
+  * plan gives exchanges, join strategies, operators outside
+  * whole-stage codegen and heavy generators, plus the map from
   * SQL-metric ids to operators that names the slowest stage's
   * operators.
   */
@@ -36,20 +38,21 @@ final class LaneMetrics private (spark: SparkSession) extends SparkListener {
 
   private val sc = spark.sparkContext
   private val compiles0 = METRIC_COMPILATION_TIME.getCount
+  private val gcMs0 = gcMs()
   private val rdds0 = sc.getPersistentRDDs.keySet
   private var jobs, stages, tasks = 0
   private var exchanges, broadcasts, noCodegen, generateHeavy = 0
   private val joins = mutable.TreeMap[String, Int]()
   private var shuffleReadBytes, shuffleReadRecords = 0L
   private var shuffleWriteBytes, shuffleWriteRecords = 0L
-  private var spillBytes, peakMemBytes = 0L
+  private var spillBytes, peakMemBytes, taskCpuNs = 0L
   private val taskMs = mutable.ArrayBuffer[Long]()
   private val stageBusyMs = mutable.Map[Int, Long]()
   private val stageMetricIds = mutable.Map[Int, Set[Long]]()
   private val metricOwner = mutable.Map[Long, String]()
   private val markerJobs, markerStages = mutable.Set[Int]()
   @volatile private var markers = 0
-  private var finals: Option[(Long, Int)] = None
+  private var finals: Option[(Long, Int, Long)] = None
 
   override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
     if (!isMarker(e.properties)) jobs += 1
@@ -72,6 +75,7 @@ final class LaneMetrics private (spark: SparkSession) extends SparkListener {
         shuffleWriteBytes += m.shuffleWriteMetrics.bytesWritten
         shuffleWriteRecords += m.shuffleWriteMetrics.recordsWritten
         spillBytes += m.memoryBytesSpilled + m.diskBytesSpilled
+        taskCpuNs += m.executorCpuTime
         peakMemBytes = math.max(peakMemBytes, m.peakExecutionMemory)
       }
     }
@@ -122,13 +126,13 @@ final class LaneMetrics private (spark: SparkSession) extends SparkListener {
     sc.removeSparkListener(this)
     synchronized {
       finals = Some((METRIC_COMPILATION_TIME.getCount - compiles0,
-        sc.getPersistentRDDs.keySet.count(!rdds0(_))))
+        sc.getPersistentRDDs.keySet.count(!rdds0(_)), gcMs() - gcMs0))
     }
     snapshot
   }
 
-  /** The figures recorded so far (compiles and `rdds_left` are read at
-    * [[detach]]; 0 before it).
+  /** The figures recorded so far (compiles, `rdds_left` and `gc_ms`
+    * are read at [[detach]]; 0 before it).
     */
   def snapshot: Counts = synchronized {
     val ms = taskMs.sorted
@@ -136,13 +140,13 @@ final class LaneMetrics private (spark: SparkSession) extends SparkListener {
     val slowOps = slow.toSeq.flatMap { case (id, _) =>
       stageMetricIds.getOrElse(id, Set.empty).toSeq.sorted.flatMap(metricOwner.get)
     }.map(_.trim).filterNot(_.startsWith("WholeStageCodegen")).distinct
-    val (compiles, rddsLeft) = finals.getOrElse((0L, 0))
+    val (compiles, rddsLeft, gc) = finals.getOrElse((0L, 0, 0L))
     Counts(jobs, stages, tasks, exchanges, broadcasts, joins.toMap,
       shuffleReadBytes, shuffleReadRecords, shuffleWriteBytes,
       shuffleWriteRecords, spillBytes, peakMemBytes,
       ms.lastOption.getOrElse(0L), if (ms.isEmpty) 0L else ms(ms.size / 2),
-      slow.map(_._2).getOrElse(0L), slowOps, noCodegen, generateHeavy,
-      Seq(compiles), rddsLeft)
+      taskCpuNs / 1000000L, gc, slow.map(_._2).getOrElse(0L), slowOps,
+      noCodegen, generateHeavy, Seq(compiles), rddsLeft)
   }
 }
 
@@ -167,6 +171,11 @@ object LaneMetrics {
   private val MarkerGroup = "graft-lane-metrics-marker"
   private val JobGroup = "spark.jobGroup.id"
 
+  /** Collection time of every garbage collector of this JVM, in ms. */
+  private def gcMs(): Long =
+    java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
+      .asScala.map(_.getCollectionTime.max(0L)).sum
+
   /** Start collecting on `spark`'s listener bus. */
   def attach(spark: SparkSession): LaneMetrics = {
     val m = new LaneMetrics(spark)
@@ -177,14 +186,18 @@ object LaneMetrics {
   /** One lane run's figures. `compiles` holds one Janino compile count
     * per run (`Bench` joins its two timed runs); `rdds_left` counts
     * RDDs persisted during the run that are still persisted after it.
+    * `task_cpu_ms` sums the tasks' executor CPU time. `gc_ms` is this
+    * JVM's collection time over the run: in local mode the driver and
+    * every task (summed task `jvmGCTime` would count one pause once
+    * per task it stopped); on a cluster, the driver alone.
     */
   final case class Counts(jobs: Int, stages: Int, tasks: Int,
       exchanges: Int, broadcasts: Int, joins: Map[String, Int],
       shuffleReadBytes: Long, shuffleReadRecords: Long,
       shuffleWriteBytes: Long, shuffleWriteRecords: Long,
       spillBytes: Long, peakMemBytes: Long, taskMaxMs: Long,
-      taskMedianMs: Long, slowStageMs: Long, slowStageOps: Seq[String],
-      noCodegen: Int, generateHeavy: Int, compiles: Seq[Long],
+      taskMedianMs: Long, taskCpuMs: Long, gcMs: Long, slowStageMs: Long,
+      slowStageOps: Seq[String], noCodegen: Int, generateHeavy: Int, compiles: Seq[Long],
       rddsLeft: Int) {
     def json: String = {
       def str(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
@@ -198,6 +211,7 @@ object LaneMetrics {
         "shuffle_write_records" -> shuffleWriteRecords,
         "spill_bytes" -> spillBytes, "peak_mem_bytes" -> peakMemBytes,
         "task_max_ms" -> taskMaxMs, "task_median_ms" -> taskMedianMs,
+        "task_cpu_ms" -> taskCpuMs, "gc_ms" -> gcMs,
         "slow_stage_ms" -> slowStageMs,
         "slow_stage_ops" -> slowStageOps.map(str).mkString("[", ",", "]"),
         "no_codegen" -> noCodegen, "generate_heavy" -> generateHeavy,

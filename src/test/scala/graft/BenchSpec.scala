@@ -206,7 +206,7 @@ class BenchSpec extends AnyFunSuite {
   test("metrics artifact field: per-lane compiles of each timed run, " +
       "in run order, as parseable JSON") {
     val zero = LaneMetrics.Counts(0, 0, 0, 0, 0, Map.empty, 0L, 0L, 0L, 0L,
-      0L, 0L, 0L, 0L, 0L, Seq.empty, 0, 0, Seq.empty, 0)
+      0L, 0L, 0L, 0L, 0L, 0L, 0L, Seq.empty, 0, 0, Seq.empty, 0)
     val json = Bench.metricsJson(Seq(
       "q_b" -> zero.copy(compiles = Seq(31L, 0L)),
       "ann_a" -> zero.copy(jobs = 3, joins = Map("BroadcastHashJoin" -> 2),

@@ -16,6 +16,7 @@ import graft.streaming.DocStoreSink.DirDocStore
   * Spark's default manager, and the fork gate on the reference job.
   */
 class CheckpointFileManagerSpec extends GraftSpecBase {
+  import CheckpointFileManagerSpec.batchFile
 
   private val key = "spark.sql.streaming.checkpointFileManagerClass"
 
@@ -107,17 +108,6 @@ class CheckpointFileManagerSpec extends GraftSpecBase {
     assert(names(dir).isEmpty, names(dir))
   }
 
-  private def edit(i: Int, minute: Int): String =
-    s"""{"id":"$i","domain":"d${i % 3}.wikipedia.org","namespace":""" +
-      s""""main namespace","title":"T$i","timestamp":"2024-01-01T00:""" +
-      f"""$minute%02d:${i % 60}%02dZ","user_name":"u$i","user_type":""" +
-      s""""human","old_length":${i * 7 % 100},"new_length":${i * 13 % 100}}"""
-
-  private def batchFile(in: String, b: Int): Unit =
-    Files.write(Paths.get(in, s"b$b.json"),
-      (0 until 20).map(i => edit(b * 100 + i, b * 4)).mkString("\n")
-        .getBytes(UTF_8))
-
   /** Runs the reference job over `batches` input files, one restart of
     * the query per segment, each segment under the named manager.
     */
@@ -189,4 +179,20 @@ class CheckpointFileManagerSpec extends GraftSpecBase {
     assert(forks.isEmpty,
       s"${forks.size} forks, e.g. ${forks.take(3).mkString(" | ")}")
   }
+}
+
+object CheckpointFileManagerSpec {
+  private def edit(i: Int, minute: Int): String =
+    s"""{"id":"$i","domain":"d${i % 3}.wikipedia.org","namespace":""" +
+      s""""main namespace","title":"T$i","timestamp":"2024-01-01T00:""" +
+      f"""$minute%02d:${i % 60}%02dZ","user_name":"u$i","user_type":""" +
+      s""""human","old_length":${i * 7 % 100},"new_length":${i * 13 % 100}}"""
+
+  /** Input file `b` of the reference job's feed: 20 human main-namespace
+    * edits over three domains, event time minute `4 * b`.
+    */
+  def batchFile(in: String, b: Int): Unit =
+    Files.write(Paths.get(in, s"b$b.json"),
+      (0 until 20).map(i => edit(b * 100 + i, b * 4)).mkString("\n")
+        .getBytes(UTF_8))
 }

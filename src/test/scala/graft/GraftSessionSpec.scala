@@ -50,6 +50,11 @@ class GraftSessionSpec extends GraftSpecBase {
         .contains(GraftSession.CodegenCacheEntries.toString))
       assert(options.get("spark.sql.streaming.checkpointFileManagerClass")
         .contains(GraftSession.CheckpointFileManagerClass))
+      assert(options.get("spark.broadcast.blockSize")
+        .contains(GraftSession.BroadcastBlockSizeConf))
+      // the value Spark reads (bare numbers are KiB) is the constant
+      assert(s.sparkContext.getConf.getSizeAsKb("spark.broadcast.blockSize") * 1024 ==
+        GraftSession.BroadcastBlockSize)
       // the nanos-timestamp feed reads through Tables.events
       val n = graft.sources.Tables.events(s, sf).limit(5).count()
       assert(n == 5)

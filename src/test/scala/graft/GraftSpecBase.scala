@@ -19,7 +19,9 @@ object GraftSpecBase {
   * Usually the test JVM's first session to generate code, so it sizes
   * the JVM-wide codegen cache: specs run with the cache lanes get.
   * Streaming specs write their checkpoints through graft's checkpoint
-  * file manager, as every `GraftSession` stream does.
+  * file manager, as every `GraftSession` stream does, and every job
+  * broadcasts its task binary in `GraftSession.BroadcastBlockSize`
+  * pieces.
   */
 trait GraftSpecBase extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSession.builder()
@@ -33,6 +35,7 @@ trait GraftSpecBase extends AnyFunSuite {
       GraftSession.CodegenCacheEntries.toLong)
     .config("spark.sql.streaming.checkpointFileManagerClass",
       GraftSession.CheckpointFileManagerClass)
+    .config("spark.broadcast.blockSize", GraftSession.BroadcastBlockSizeConf)
     .config("spark.sql.warehouse.dir", GraftSpecBase.warehouseDir)
     .config("spark.ui.enabled", "false")
     .getOrCreate()

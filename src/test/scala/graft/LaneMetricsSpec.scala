@@ -1,11 +1,14 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The per-lane collector that `Bench` and `QuickTime` attach: plan
-  * counts from the final adaptive plan, run-to-run stability, the
-  * heavy-generator flag (the r18 finding) and detach.
+  * counts from the final adaptive plan, task CPU and GC time,
+  * run-to-run stability, the heavy-generator flag (the r18 finding)
+  * and detach.
   */
 class LaneMetricsSpec extends GraftSpecBase {
 
@@ -28,6 +31,35 @@ class LaneMetricsSpec extends GraftSpecBase {
     assert(m.joins.getOrElse("BroadcastHashJoin", 0) >= 1)
     assert(m.jobs > 0 && m.stages > 0 && m.tasks > 0)
     assert(m.taskMaxMs >= m.taskMedianMs)
+  }
+
+  test("task_cpu_ms: a CPU-bound aggregate reports CPU time, at most " +
+      "the wall time of its cores") {
+    initLog()
+    val agg = spark.range(0L, 4000000L, 1L, 4)
+      .select(max(xxhash64(col("id"), col("id") * 3)))
+    noop(agg) // cold: plans and compiles
+    val t0 = System.nanoTime()
+    val m = measured(noop(agg))
+    val wallMs = (System.nanoTime() - t0) / 1000000L
+    assert(m.taskCpuMs > 0, m)
+    assert(m.taskCpuMs <= 4 * wallMs, s"${m.taskCpuMs} ms CPU in $wallMs ms wall")
+  }
+
+  test("gc_ms: the JVM's collection time over the run, a forced GC included") {
+    initLog()
+    def gcMs() = java.lang.management.ManagementFactory
+      .getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum
+    val outer0 = gcMs()
+    val m = LaneMetrics.attach(spark)
+    val inner0 = gcMs()
+    noop(SparkEntry.queries("q_broadcast_join")(spark, sf))
+    System.gc()
+    val inner = gcMs() - inner0
+    val c = m.detach()
+    val outer = gcMs() - outer0
+    assert(inner > 0, "a full GC of the spec JVM took no measurable time")
+    assert(c.gcMs >= inner && c.gcMs <= outer, (inner, c.gcMs, outer))
   }
 
   test("two warm runs of one lane give equal counts; the second compiles nothing") {
