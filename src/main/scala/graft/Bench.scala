@@ -170,192 +170,15 @@ object Bench {
     ran.collect { case n if quadraticContract(n) => "\"" + n + "\"" }
       .mkString("[", ",", "]")
 
-  /** Fixed-work calibration probe: a single-threaded xorshift loop
-    * whose quiet-host time is known, run (after one untimed JIT warm)
-    * right before the suite. Exists because loadavg alone MISSED a
-    * loaded host in r12: `noisy:false` at loadavg 2.78 while the
-    * whole 161-lane suite shifted a uniform 1.37× and four lanes
-    * crossed the 2× regression gate with zero code changes (r12
-    * VERDICT item 8). Loadavg is a 1/5/15-min average that lags both
-    * bursts and just-started competitors; actually TIMING fixed work
-    * measures the contention the suite is about to experience.
-    */
-  private[graft] def calibrationProbeMs(): Double = {
-    def pass(): Long = {
-      var x = 0x9E3779B97F4A7C15L
-      var i = 0
-      while (i < 200000000) {
-        x ^= x << 13; x ^= x >>> 7; x ^= x << 17; i += 1
-      }
-      x
-    }
-    val sink = pass() // untimed JIT warm
-    val t0 = System.nanoTime()
-    val sink2 = pass()
-    val ms = (System.nanoTime() - t0) / 1e6
-    if (sink == 42L && sink2 == 43L) System.err.println("[bench] probe")
-    ms
-  }
-
-  /** Parallel arm of the calibration probe: every thread streams a
-    * private long array (memory-bandwidth-bound, unlike the
-    * register-only xorshift arm) and the WALL time of the slowest
-    * thread is the figure. Exists because the single-thread arm is
-    * blind to the contention that actually shifts a 32-thread suite:
-    * r13's final run read probe-quiet (393.6 vs 383.5 ms baseline)
-    * at loadavg 3.60 while the whole suite sat ~1.2× over its quiet
-    * mid-round run — a handful of background hogs on a 32-core box
-    * steals little CPU from one pinned thread but plenty of shared
-    * memory bandwidth/LLC from 32. Sized small (8 MiB × threads) so
-    * the probe is bandwidth-bound, not capacity-bound, and runs in
-    * ~0.5 s.
-    */
-  private[graft] val ProbeThreads = 32
-  private[graft] def calibrationProbeParMs(
-      threads: Int = ProbeThreads): Double = {
-    val words = (8 << 20) / 8 // 8 MiB of longs per thread
-    def pass(a: Array[Long], rounds: Int): Long = {
-      var s = 0L; var r = 0
-      while (r < rounds) {
-        var i = 0
-        while (i < a.length) { s += a(i); a(i) = s; i += 1 }
-        r += 1
-      }
-      s
-    }
-    // Thread start, JIT, and first-touch page zeroing sit OUTSIDE the
-    // timed windows (each thread warms its own array, then all release
-    // together off a barrier): with them inside, the figure spread
-    // 80-147 ms run to run — 1.8× of scheduling noise on ~100 ms of
-    // work, tripping the gate on nothing. The figure is the MIN of
-    // three barrier-aligned steady-state windows (64 passes × 8 MiB ×
-    // threads ≈ 16 GiB each at 32): sub-second spikes (one window) are
-    // filtered, while the sustained multi-minute contention that
-    // actually shifts a suite (the r12/r13 envelope) inflates all
-    // three. Measured single-window spread without the min was still
-    // 177-280 ms on this box's fluctuating background load.
-    val windows = 3
-    val sink = new java.util.concurrent.atomic.AtomicLong()
-    val wallMs = new Array[Double](windows)
-    @volatile var t0 = 0L
-    val start = new java.util.concurrent.CyclicBarrier(threads,
-      () => t0 = System.nanoTime())
-    var w = 0
-    val finish = new java.util.concurrent.CyclicBarrier(threads, () => {
-      wallMs(w) = (System.nanoTime() - t0) / 1e6; w += 1
-    })
-    val ts = (1 to threads).map { i =>
-      val t = new Thread(() => {
-        val a = new Array[Long](words)
-        a(0) = i
-        sink.addAndGet(pass(a, 8)) // untimed: JIT + page touch
-        var k = 0
-        while (k < windows) {
-          start.await()
-          sink.addAndGet(pass(a, 64)) // timed steady-state window
-          finish.await()
-          k += 1
-        }
-      })
-      t.start(); t
-    }
-    ts.foreach(_.join())
-    if (sink.get == 42L) System.err.println("[bench] par probe")
-    wallMs.min
-  }
-
-  /** Quiet-host probe time on the reference box (measured r13:
-    * 336-345 ms over 5 post-warm runs at loadavg ~1.9). Documentation
-    * and spec fixture ONLY — the live baseline is the min over the
-    * HOST-KEYED, AGED probe history ([[quietBaseline]], persisted as
-    * `probe_hist`/`probe_par_hist` + `probe_host` in bench_full.json):
-    * an absolute constant would make any host ≥ 3× slower than the
-    * reference read permanently `noisy`, silencing the regression
-    * gate forever. 3× is the contention slack — CPU-steal that
-    * triples fixed single-threaded work will inflate suite lanes
-    * well past the 2× gate, so the gate must not fire.
-    */
-  private[graft] val QuietProbeMs = 340.0
-
-  /** Probe history window: the baseline is the min over the last
-    * this-many runs ON THIS HOST, so (a) a committed artifact
-    * traveling to a slower machine cannot poison it (host key —
-    * r13 ADVICE), and (b) a stale minimum from a faster PAST state
-    * of the same host ages out after K runs instead of marking the
-    * box permanently noisy (r13 VERDICT item 8).
-    */
-  private[graft] val ProbeHistLen = 8
-
-  /** Bump when either probe's WORK changes (loop counts, array
-    * sizes): history from a different probe version is meaningless
-    * as a baseline and is discarded on read (hit live: the 6-pass
-    * par probe's 33 ms baseline read the 64-pass probe as noisy).
-    */
-  private[graft] val ProbeVersion = 4
-
-  /** Whether the previous artifact's probe history may seed this
-    * run's baseline: only when it was recorded on the same host name,
-    * at the same core count and by the same probe version. A committed
-    * artifact travels across machines, and hosts of different sizes
-    * share a name (`vm`), so a baseline from a faster or wider box
-    * would mark this one permanently noisy. Artifacts predating a key
-    * carry none and are discarded (the window self-seeds in one run).
-    */
-  private[graft] def keepProbeHistory(prevHost: Option[String],
-      prevCores: Option[Int], prevVer: Option[Int],
-      host: String, cores: Int): Boolean =
-    prevHost.contains(host) && prevCores.contains(cores) &&
-      prevVer.contains(ProbeVersion)
-
-  /** Append the current reading to the (already host-filtered) prev
-    * history, keeping the last [[ProbeHistLen]] entries. Garbage
-    * readings (≤ 0, corrupted artifact) are dropped.
-    */
-  private[graft] def probeWindow(cur: Double,
-      prevHist: Seq[Double]): Seq[Double] =
-    prevHist.filter(_ > 0).takeRight(ProbeHistLen - 1) :+ cur
-
-  /** Rolling-minimum quiet baseline over the aged window: contention
-    * only ever INFLATES a probe, so the windowed min converges on the
-    * host's true quiet speed — no hardware constant needed. A first
-    * run (no history) is its own baseline: never probe-noisy, and a
-    * contended first baseline self-corrects downward on later quiet
-    * runs.
-    */
-  private[graft] def quietBaseline(hist: Seq[Double]): Double =
-    if (hist.isEmpty) 0.0 else hist.min
-
-  /** Parallel-arm noisy threshold: run-to-run variance of the
-    * bandwidth probe on a quiet box is well under 10 %, so 1.4× the
-    * windowed min is real contention, and the bandwidth contention
-    * that shifts a 32-thread suite ≥ 1.3-1.5× (the r12/r13 envelope)
-    * inflates an all-cores bandwidth probe at least as much.
-    */
-  private[graft] val ParNoisyFactor = 1.4
-
-  /** The host is too contended for round-over-round lane comparisons
-    * when ANY signal fires: loadavg (cheap, catches sustained load),
-    * the single-thread probe (CPU steal loadavg lags), or the
-    * parallel probe (memory-bandwidth contention both others miss).
-    * A zero quiet baseline (first run on a host) disables that arm.
-    */
-  private[graft] def noisyHost(loadavg: Double, probeMs: Double,
-      quietProbeMs: Double = QuietProbeMs,
-      probeParMs: Double = 0.0, quietParMs: Double = 0.0): Boolean =
-    loadavg > 4.0 ||
-      (quietProbeMs > 0 && probeMs > 3.0 * quietProbeMs) ||
-      (quietParMs > 0 && probeParMs > ParNoisyFactor * quietParMs)
-
   /** Median of cur/prev over lanes present on both sides — the
-    * suite-wide shift estimate. Host contention moves the whole
-    * suite by a near-uniform factor (r12: 1.37-1.48×, r13: ~1.2×,
-    * both adjudicated by hand exactly this way); a real regression
+    * suite-wide shift estimate, taken over the `cpu` maps. Whatever
+    * moves every lane's CPU time alike (a slower clock, a JDK change)
+    * moves the whole suite by a near-uniform factor; a real regression
     * is idiosyncratic to its lane. Normalizing each lane's ratio by
-    * this median mechanizes that adjudication. Clamped at ≥ 1 so a
-    * FASTER suite (host got quieter) never inflates ratios into
-    * false flags, and defaulting to 1 under [[MinLanesForShift]]
-    * shared lanes (a dev-loop subset must not self-normalize its own
-    * regression away).
+    * this median separates the two. Clamped at ≥ 1 so a FASTER suite
+    * never inflates ratios into false flags, and defaulting to 1 under
+    * [[MinLanesForShift]] shared lanes (a dev-loop subset must not
+    * self-normalize its own regression away).
     */
   private[graft] val MinLanesForShift = 8
   private[graft] def medianShift(prev: Map[String, Double],
@@ -373,22 +196,12 @@ object Bench {
   }
 
   /** Absolute floor under the regression gate: a lane flags only if
-    * the (shift-normalized) time and its baseline are both ≥ 1 s, or
-    * the normalized delta is ≥ 1 s. r13 shipped text_chunk
-    * 0.12 s → 0.41 s as "regressed" — 0.29 s of scheduler jitter on
-    * a 32-core box; any sub-second lane can trip a pure 2× ratio on
-    * noise no probe can see.
+    * the (shift-normalized) CPU seconds and its baseline are both ≥ 1 s,
+    * or the normalized delta is ≥ 1 s. Any sub-second lane can trip a
+    * pure 2× ratio on JIT and GC jitter.
     */
   private[graft] val RegressFloorSec = 1.0
 
-  /** Regression gate over the `prev` trend map: lanes whose
-    * suite-median-normalized time is ≥ 2× their previous time AND
-    * clears [[RegressFloorSec]], evaluated ONLY when the host is
-    * quiet (contention inflates unevenly — a noisy run would flag
-    * half the suite) and only against a prev run at the SAME sf dir
-    * (scale runs share the cwd artifact; a 100× prev would flag
-    * everything). Failed lanes (-1) never enter either side.
-    */
   /** The gate predicate shared by the in-suite pass and the
     * post-suite confirmation pass: shift-normalized ≥ 2× over prev,
     * above [[RegressFloorSec]].
@@ -400,10 +213,18 @@ object Bench {
         norm - p >= RegressFloorSec)
   }
 
+  /** Regression gate over the previous artifact's `cpu` map: lanes
+    * whose suite-median-normalized CPU seconds clear [[clearsGate]],
+    * only against a prev run at the SAME sf dir (a 100× prev would
+    * flag everything). CPU time, not wall time: waiting for a core on a
+    * busy host stretches a lane's wall seconds, not its CPU seconds (the
+    * perfbench workloads' CPU time spread 0.05–0.08 between runs of one
+    * commit, their wall-clock 0.26–0.52). Failed lanes (-1) never enter
+    * either side, and an empty prev (no `cpu` map yet) flags nothing.
+    */
   private[graft] def regressedLanes(prev: Map[String, Double],
-      cur: Seq[(String, Double)], noisy: Boolean,
-      sameSf: Boolean): Seq[String] =
-    if (noisy || !sameSf) Seq.empty
+      cur: Seq[(String, Double)], sameSf: Boolean): Seq[String] =
+    if (!sameSf) Seq.empty
     else {
       val shift = medianShift(prev, cur)
       cur.collect {
@@ -412,22 +233,15 @@ object Bench {
       }.sorted
     }
 
-  /** Post-suite CONFIRMATION of gate candidates (r14): the probes
-    * and the median shift catch contention that is either present at
-    * suite start or uniform across it, but a 10-20 s host stall in
-    * the MIDDLE of a quiet run inflates a few consecutive
-    * alphabetical lanes and nothing else — min-of-2 can't filter a
-    * stall longer than the lane (both in-suite runs sit inside it),
-    * and the suite median never moves (measured twice on one quiet
-    * r14 day: curate_dsir+curate_dsir_hashed 2.4× in one run,
-    * text_search_bm25..text_top_ngrams ~2× in the next, every lane
-    * re-timing clean in isolation). A transient stall has passed by
-    * suite end; a genuine code regression reproduces whenever the
-    * lane runs. So each candidate re-times once post-suite and the
-    * flag ships only if the re-time still clears the same normalized
-    * threshold; cleared lanes ship as "transient" so the stall is
-    * still visible in the artifact, and a FAILED re-time keeps the
-    * flag (no evidence, no acquittal).
+  /** Post-suite CONFIRMATION of gate candidates: a lane whose CPU
+    * seconds jumped once (a JIT deoptimization, a GC storm) re-times
+    * clean after the suite, while a genuine code regression reproduces
+    * whenever the lane runs.
+    * So each candidate re-times once post-suite and the flag ships only
+    * if the re-time still clears the same normalized threshold; cleared
+    * lanes ship as "transient" so the event stays visible in the
+    * artifact, and a FAILED re-time keeps the flag (no evidence, no
+    * acquittal).
     */
   private[graft] def confirmRegressions(candidates: Seq[String],
       prev: Map[String, Double], shift: Double,
@@ -449,6 +263,27 @@ object Bench {
       case "sf0.1" => "bench_full.json"
       case base => s"bench_$base.json"
     }
+
+  /** Round-over-round trend in ONE artifact (r10 VERDICT item 8): the
+    * `cpu` map of the artifact being REPLACED (as JSON text, to ride
+    * the new file as "prev", and parsed, for the gate) and its `sf`
+    * dir. Jackson is already on the Spark classpath. Any read/parse
+    * failure, and an artifact written before the `cpu` map existed,
+    * degrades to {}, which flags nothing — the trend field must never
+    * cost a run its result.
+    */
+  private[graft] def readPrev(artifact: String)
+      : (String, Map[String, Double], String) =
+    try {
+      val root = new com.fasterxml.jackson.databind.ObjectMapper()
+        .readTree(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(artifact)))
+      val c = Option(root.get("cpu"))
+      (c.map(_.toString).getOrElse("{}"), c.map { node =>
+          import scala.jdk.CollectionConverters._
+          node.properties().asScala.map(e => e.getKey -> e.getValue.asDouble).toMap
+        }.getOrElse(Map.empty[String, Double]),
+        Option(root.get("sf")).map(_.asText).getOrElse(""))
+    } catch { case _: Throwable => ("{}", Map.empty[String, Double], "") }
 
   /** The `metrics` artifact field: per lane, in run order, the
     * [[LaneMetrics]] of its second (warm) timed run, with `compiles`
@@ -489,10 +324,11 @@ object Bench {
     // failures still surface — the bench itself prints FAILED lines
     // and carries the penalty term.
     spark.sparkContext.setLogLevel("ERROR")
-    // loadavg at bench START, recorded in the header: in-suite times on
-    // a contended host run 10-40x the isolated cost (SURVEY §4.5), so
-    // round-over-round diffs need the contention context to be readable
-    // without manual adjudication. > ~2 on this box means "suspect".
+    // loadavg at bench START, recorded in the header: in-suite wall
+    // times on a contended host run 10-40x the isolated cost (SURVEY
+    // §4.5), so a wall-clock diff needs the contention context to be
+    // readable (the CPU-time gate does not). Once the suite runs,
+    // loadavg measures the bench's own local[N] threads.
     val loadavg = java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.getSystemLoadAverage
     // Force FULL computation of every output column. A bare count()
@@ -510,13 +346,9 @@ object Bench {
     spark.range(2000000L).selectExpr("sum(id * 2)").collect()
     SparkEntry.queries.get("q_filter_project")
       .foreach(fn => try run(fn(spark, sfDir)) catch { case _: Throwable => () })
-    // calibration probes AFTER the JVM warm, BEFORE the suite — the
-    // direct host-contention measurements the noisy gate uses
-    // (single-thread CPU-steal arm + all-cores bandwidth arm)
-    val probeMs = calibrationProbeMs()
-    val probeParMs = calibrationProbeParMs()
-    // min of 2 runs per query: the shared host shows multi-second
-    // scheduling noise; the minimum is the reproducible cost.
+    // min of 2 runs per query, for wall and CPU seconds alike: the
+    // shared host shows multi-second scheduling noise; the minimum is
+    // the reproducible cost.
     // A failed query must NOT masquerade as a fast success: record it
     // as -1 and list it in "failed" (the total also carries a large
     // penalty per failure so breakage can't improve the headline).
@@ -551,11 +383,14 @@ object Bench {
         (r, m.detach())
       }
       val Seq(cold, warm) = runs.map(_._2)
-      (name, if (runs.exists(_._1.failure.isDefined)) -1.0 else runs.map(_._1.seconds).min,
+      def best(f: LaneRunner.Run => Double): Double =
+        if (runs.exists(_._1.failure.isDefined)) -1.0 else runs.map(r => f(r._1)).min
+      (name, best(_.seconds), best(_.cpuSeconds),
         warm.copy(compiles = cold.compiles ++ warm.compiles),
         runs.exists(_._1.leaked.nonEmpty))
     }
     val results = laneRuns.map(r => r._1 -> r._2)
+    val cpu = laneRuns.map(r => r._1 -> r._3)
     def fmt(v: Double, dec: Int): String =
       String.format(java.util.Locale.ROOT, s"%.${dec}f", Double.box(v))
     def queriesJson(rs: Seq[(String, Double)], dec: Int): String =
@@ -574,7 +409,7 @@ object Bench {
       case (n, v) if v >= 0 && !quadraticContract(n) => v
     }.sum + failed.count(!quadraticContract(_)) * 1000.0 + buildSec
     val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val leakedJson = laneRuns.filter(_._4).map("\"" + _._1 + "\"")
+    val leakedJson = laneRuns.filter(_._5).map("\"" + _._1 + "\"")
       .mkString("[", ",", "]")
     // two streaming throughput figures next to the batch seconds — the
     // reference's actual modality is an unbounded stream; the windowed
@@ -587,75 +422,22 @@ object Bench {
     val streamRpsStateful =
       if (only.isDefined) 0.0
       else try streamBenchStateful(spark) catch { case _: Throwable => -1.0 }
-    // Round-over-round trend in ONE artifact (r10 VERDICT item 8): the
-    // per-query map of the artifact being REPLACED rides the
-    // new file as "prev", so a regression diff reads off a single
-    // artifact instead of two git revisions. Jackson is already on the
-    // Spark classpath; any read/parse failure degrades to {} — the
-    // trend field must never cost a run its result.
-    val host = try java.net.InetAddress.getLocalHost.getHostName
-      catch { case _: Throwable => "unknown" }
     val artifact = artifactFile(sfDir)
-    val (prevJson, prevMap, prevSf, prevHist, prevParHist) = try {
-      val p = java.nio.file.Paths.get(artifact)
-      if (java.nio.file.Files.exists(p)) {
-        val om = new com.fasterxml.jackson.databind.ObjectMapper()
-        val root = om.readTree(java.nio.file.Files.readAllBytes(p))
-        val q = Option(root.get("queries"))
-        val m = q.map { node =>
-          import scala.jdk.CollectionConverters._
-          node.properties().asScala
-            .map(e => e.getKey -> e.getValue.asDouble).toMap
-        }.getOrElse(Map.empty[String, Double])
-        def hist(field: String): Seq[Double] =
-          if (!keepProbeHistory(
-              Option(root.get("probe_host")).map(_.asText),
-              Option(root.get("probe_cores")).map(_.asInt),
-              Option(root.get("probe_ver")).map(_.asInt), host, cpus))
-            Seq.empty
-          else Option(root.get(field)).map { node =>
-            import scala.jdk.CollectionConverters._
-            node.elements().asScala.map(_.asDouble).toSeq
-          }.getOrElse(Seq.empty)
-        (q.map(_.toString).getOrElse("{}"), m,
-          Option(root.get("sf")).map(_.asText).getOrElse(""),
-          hist("probe_hist"), hist("probe_par_hist"))
-      } else ("{}", Map.empty[String, Double], "", Seq.empty[Double],
-        Seq.empty[Double])
-    } catch {
-      case _: Throwable =>
-        ("{}", Map.empty[String, Double], "", Seq.empty[Double],
-          Seq.empty[Double])
-    }
-    // noisy-host gate (r9 item 8, hardened r13/r14): loadavg at START
-    // (once the suite runs, loadavg measures the bench's own local[N]
-    // threads), a slowed single-thread probe vs this host's aged
-    // rolling-min baseline (CPU steal loadavg lags), or a slowed
-    // parallel probe (memory-bandwidth contention the single-thread
-    // arm read straight through in r13). Probes are sampled BEFORE
-    // the suite for the same reason as loadavg.
-    val probeHist = probeWindow(probeMs, prevHist)
-    val probeParHist = probeWindow(probeParMs, prevParHist)
-    val probeQuiet = quietBaseline(probeHist)
-    val probeParQuiet = quietBaseline(probeParHist)
-    val noisy = noisyHost(loadavg, probeMs, probeQuiet,
-      probeParMs, probeParQuiet)
+    val (prevJson, prevCpu, prevSf) = readPrev(artifact)
     // regression gate (r11 item 6, mechanized r14): suite-median-
-    // normalized ≥2× lanes above the absolute floor, quiet host +
-    // same sf only — one machine-readable field instead of an
-    // artifact diff. median_shift ships so a uniform host envelope
-    // is readable off the artifact without hand adjudication.
-    val shift = medianShift(prevMap, results)
-    val candidates = regressedLanes(prevMap, results, noisy,
-      sameSf = prevSf == sfDir)
+    // normalized ≥2× CPU-time lanes above the absolute floor, same sf
+    // only — one machine-readable field instead of an artifact diff.
+    // median_shift ships so a uniform envelope is readable off the
+    // artifact without hand adjudication.
+    val shift = medianShift(prevCpu, cpu)
+    val candidates = regressedLanes(prevCpu, cpu, sameSf = prevSf == sfDir)
     // confirmation pass: candidates re-time once, AFTER the suite and
-    // the two streaming lanes — far from whatever mid-suite stall
-    // flagged them (see confirmRegressions). Real regressions survive.
+    // the two streaming lanes (see confirmRegressions)
     val (regressed, transientLanes) =
-      confirmRegressions(candidates, prevMap, shift, name =>
+      confirmRegressions(candidates, prevCpu, shift, name =>
         selected.get(name).map { fn =>
           val r = LaneRunner.run(spark, sfDir, fn)(run)
-          if (r.failure.isDefined) -1.0 else r.seconds
+          if (r.failure.isDefined) -1.0 else r.cpuSeconds
         }.getOrElse(-1.0))
     // a flagged ann_hnsw* re-time above rebuilds the lane memo; drop it
     graft.operators.Hnsw.releaseGraphCache(spark)
@@ -663,8 +445,6 @@ object Bench {
       .mkString("[", ",", "]")
     val transientJson = transientLanes.map("\"" + _ + "\"")
       .mkString("[", ",", "]")
-    def histJson(h: Seq[Double]): String =
-      h.map(fmt(_, 1)).mkString("[", ",", "]")
     val quadraticJson = quadraticLanesJson(results.map(_._1))
     // -1.0 is the internal "family never ran" sentinel: the artifact
     // says null, not negative seconds (r16 ADVICE)
@@ -675,13 +455,13 @@ object Bench {
     val blockSize = spark.sparkContext.getConf
       .getSizeAsKb("spark.broadcast.blockSize", "4m") * 1024
     def line(qs: String, extra: String = "") =
-      s"""{"metric":"total","value":${fmt(total, 4)},"total_nonquadratic":${fmt(totalNonQuadratic, 4)},"quadratic_lanes":$quadraticJson,"hnsw_build_sec":$hnswBuildJson,"unit":"sec","nq":${results.size},"queries":$qs,"failed":$failedJson,"leaked":$leakedJson,"regressed":$regressedJson,"transient":$transientJson,"median_shift":${fmt(shift, 3)},"stream_rows_per_sec":${fmt(streamRps, 0)},"stream_rows_per_sec_stateful":${fmt(streamRpsStateful, 0)},"loadavg":${fmt(loadavg, 2)},"probe_ms":${fmt(probeMs, 1)},"probe_quiet_ms":${fmt(probeQuiet, 1)},"probe_par_ms":${fmt(probeParMs, 1)},"probe_par_quiet_ms":${fmt(probeParQuiet, 1)},"noisy":$noisy,"codegen_cache_entries":$cacheEntries,"broadcast_block_size":$blockSize,"full":"$artifact","sf":"$sfDir"$extra}"""
+      s"""{"metric":"total","value":${fmt(total, 4)},"total_nonquadratic":${fmt(totalNonQuadratic, 4)},"quadratic_lanes":$quadraticJson,"hnsw_build_sec":$hnswBuildJson,"unit":"sec","nq":${results.size},"queries":$qs,"failed":$failedJson,"leaked":$leakedJson,"regressed":$regressedJson,"transient":$transientJson,"median_shift":${fmt(shift, 3)},"stream_rows_per_sec":${fmt(streamRps, 0)},"stream_rows_per_sec_stateful":${fmt(streamRpsStateful, 0)},"loadavg":${fmt(loadavg, 2)},"codegen_cache_entries":$cacheEntries,"broadcast_block_size":$blockSize,"full":"$artifact","sf":"$sfDir"$extra}"""
     // Full map (4-decimal) to the file artifact; headline map
     // (3-decimal) to stdout, with a hard 1600-char guard: should
     // the headline set ever outgrow the tail budget, drop precision
     // rather than ship another unparseable round.
     val fullLine = line(queriesJson(results, 4),
-      s""","metrics":${metricsJson(hnswBuildMetrics ++ laneRuns.map(r => r._1 -> r._3))},"probe_host":"$host","probe_cores":$cpus,"probe_ver":$ProbeVersion,"probe_hist":${histJson(probeHist)},"probe_par_hist":${histJson(probeParHist)},"prev":$prevJson""")
+      s""","cpu":${queriesJson(cpu, 4)},"metrics":${metricsJson(hnswBuildMetrics ++ laneRuns.map(r => r._1 -> r._4))},"cores":$cpus,"prev":$prevJson""")
     try java.nio.file.Files.write(java.nio.file.Paths.get(artifact),
       (fullLine + "\n").getBytes("UTF-8"))
     catch { case _: Throwable => () }

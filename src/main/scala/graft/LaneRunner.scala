@@ -14,22 +14,31 @@ import graft.operators.{Hnsw, Materialize}
 private[graft] object LaneRunner {
   type Lane = (SparkSession, String) => DataFrame
 
-  /** One run: seconds to build and consume the result, the failure if
-    * it threw, and the RDDs it leaked (`id name`).
+  /** One run: seconds to build and consume the result, the JVM's
+    * process CPU seconds over the same interval, the failure if it
+    * threw, and the RDDs it leaked (`id name`). Lanes run one at a time
+    * in one local-mode JVM, so `cpuSeconds` counts the driver, the tasks
+    * and GC together. It leaves out time spent waiting for a core on a
+    * busy host, which `seconds` includes.
     */
-  final case class Run(seconds: Double, failure: Option[Throwable],
-      leaked: Seq[String])
+  final case class Run(seconds: Double, cpuSeconds: Double,
+      failure: Option[Throwable], leaked: Seq[String])
+
+  private val os = java.lang.management.ManagementFactory
+    .getOperatingSystemMXBean.asInstanceOf[com.sun.management.OperatingSystemMXBean]
 
   def run(spark: SparkSession, dir: String, lane: Lane)(
       consume: DataFrame => Unit): Run = {
     val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
     val t0 = System.nanoTime()
+    val c0 = os.getProcessCpuTime
     var result: Option[DataFrame] = None
     val failure =
       try { result = Some(lane(spark, dir)); consume(result.get); None }
       catch { case t: Throwable => Some(t) }
     val seconds = (System.nanoTime() - t0) / 1e9
-    Run(seconds, failure, Materialize.settle(spark, before, result))
+    val cpuSeconds = (os.getProcessCpuTime - c0) / 1e9
+    Run(seconds, cpuSeconds, failure, Materialize.settle(spark, before, result))
   }
 
   /** `each` over `lanes` in order. The `ann_hnsw*` lanes share one

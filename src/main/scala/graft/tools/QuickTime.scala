@@ -1,9 +1,11 @@
 package graft.tools
 
 /** Dev-loop per-run timer: run named SparkEntry queries N times each
-  * through the noop sink and print EVERY run's seconds (Bench prints
-  * only the min — the distribution is what tells contention from
-  * real cost), plus one `QM <query> {…}` line per run with the run's
+  * through the noop sink and print EVERY run's wall seconds and, after
+  * a `/`, its process CPU seconds (Bench keeps only the min — the
+  * distribution is what tells contention from real cost: waiting for a
+  * core on a busy host stretches the wall figure, not the CPU one),
+  * plus one `QM <query> {…}` line per run with the run's
   * [[graft.LaneMetrics]]. Usage:
   *   runMain graft.tools.QuickTime <sfDir> <n> <query>[,<query>...]
   */
@@ -29,17 +31,17 @@ object QuickTime {
     spark.range(2000000L).selectExpr("sum(id * 2)").collect()
     graft.LaneRunner.inOrder(spark, dir,
         names.map(name => name -> graft.SparkEntry.queries(name))) { (name, fn) =>
-      val times = (1 to n).map { _ =>
+      val runs = (1 to n).map { _ =>
         val m = graft.LaneMetrics.attach(spark)
         val r = graft.LaneRunner.run(spark, dir, fn)(
           _.write.format("noop").mode("overwrite").save())
         r.failure.foreach(throw _)
         println(s"QM $name ${m.detach().json}")
-        r.seconds
+        r
       }
       println(f"QT $name%-24s " +
-        times.map(t => f"$t%.3f").mkString(" ") +
-        f"  min=${times.min}%.3f")
+        runs.map(r => f"${r.seconds}%.3f/${r.cpuSeconds}%.3f").mkString(" ") +
+        f"  min=${runs.map(_.seconds).min}%.3f/${runs.map(_.cpuSeconds).min}%.3f")
     }
     spark.stop()
   }

@@ -5,8 +5,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Bench regression-gate unit specs (no Spark session needed). */
 class BenchSpec extends AnyFunSuite {
 
-  // a realistic suite: enough shared lanes that medianShift engages
-  // (MinLanesForShift), a mix of sub-second and multi-second lanes
+  // a realistic suite's per-lane CPU seconds: enough shared lanes that
+  // medianShift engages (MinLanesForShift), a mix of sub-second and
+  // multi-second lanes
   private val prev = Map(
     "a" -> 1.0, "b" -> 2.0, "c" -> 0.5, "d" -> 3.0, "e" -> 4.0,
     "f" -> 1.5, "g" -> 2.5, "h" -> 0.8, "i" -> 6.0, "j" -> 0.12)
@@ -18,13 +19,10 @@ class BenchSpec extends AnyFunSuite {
     // one idiosyncratic 2.5x regression on a multi-second lane amid
     // an otherwise-flat suite
     val cur = flat(1.0).map { case ("d", _) => "d" -> 7.5; case kv => kv }
-    assert(Bench.regressedLanes(prev, cur, noisy = false,
+    assert(Bench.regressedLanes(prev, cur,
       sameSf = true) == Seq("d"))
-    // noisy host: contention inflates unevenly — never flag
-    assert(Bench.regressedLanes(prev, cur, noisy = true,
-      sameSf = true).isEmpty)
     // different sf dir (scale run sharing the cwd artifact): never flag
-    assert(Bench.regressedLanes(prev, cur, noisy = false,
+    assert(Bench.regressedLanes(prev, cur,
       sameSf = false).isEmpty)
   }
 
@@ -33,16 +31,16 @@ class BenchSpec extends AnyFunSuite {
     // r13's shipping artifact: text_chunk 0.12 s -> 0.41 s flagged by
     // the bare 2x ratio — 0.29 s of scheduler jitter on a 32-core box
     val jitter = flat(1.0).map { case ("j", _) => "j" -> 0.41; case kv => kv }
-    assert(Bench.regressedLanes(prev, jitter, noisy = false,
+    assert(Bench.regressedLanes(prev, jitter,
       sameSf = true).isEmpty)
     // a sub-second lane whose normalized DELTA clears the floor is a
     // real regression (0.5 s -> 2.0 s = +1.5 s), not jitter
     val real = flat(1.0).map { case ("c", _) => "c" -> 2.0; case kv => kv }
-    assert(Bench.regressedLanes(prev, real, noisy = false,
+    assert(Bench.regressedLanes(prev, real,
       sameSf = true) == Seq("c"))
     // multi-second 2x flags regardless
     val big = flat(1.0).map { case ("i", _) => "i" -> 12.5; case kv => kv }
-    assert(Bench.regressedLanes(prev, big, noisy = false,
+    assert(Bench.regressedLanes(prev, big,
       sameSf = true) == Seq("i"))
   }
 
@@ -52,18 +50,18 @@ class BenchSpec extends AnyFunSuite {
     // background load with zero code changes — median-normalized
     // ratios are all ~1x, nothing flags (previously 4 lanes did)
     assert(math.abs(Bench.medianShift(prev, flat(1.5)) - 1.5) < 1e-9)
-    assert(Bench.regressedLanes(prev, flat(1.5), noisy = false,
+    assert(Bench.regressedLanes(prev, flat(1.5),
       sameSf = true).isEmpty)
     // a real 3x regression on lane d amid the same 1.5x envelope:
     // normalized ratio 3/1.5 = 2x with a multi-second delta -> flags
     val cur = flat(1.5).map { case ("d", _) => "d" -> 9.0; case kv => kv }
-    assert(Bench.regressedLanes(prev, cur, noisy = false,
+    assert(Bench.regressedLanes(prev, cur,
       sameSf = true) == Seq("d"))
     // a FASTER suite never inflates ratios into false flags: the
     // shift clamps at 1, so a lane flat in absolute time stays green
     assert(Bench.medianShift(prev, flat(0.5)) == 1.0)
     val faster = flat(0.5).map { case ("e", _) => "e" -> 4.0; case kv => kv }
-    assert(Bench.regressedLanes(prev, faster, noisy = false,
+    assert(Bench.regressedLanes(prev, faster,
       sameSf = true).isEmpty)
     // under MinLanesForShift shared lanes the shift is 1 — a dev-loop
     // subset must not normalize its own regression away
@@ -75,81 +73,63 @@ class BenchSpec extends AnyFunSuite {
     // a previously-failed (-1) lane has no meaningful baseline
     val p = prev ++ Map("x" -> -1.0, "y" -> 1.0)
     val cur = flat(1.0) ++ Seq("x" -> 5.0, "y" -> -1.0)
-    assert(Bench.regressedLanes(p, cur, noisy = false,
+    assert(Bench.regressedLanes(p, cur,
       sameSf = true).isEmpty)
   }
 
-  test("slowed calibration probe forces noisy and suppresses the " +
-      "regressed field even at low loadavg (the r12 detector gap)") {
-    // r12 shipped regressed:[4 lanes] at loadavg 2.78 on a uniformly
-    // 1.37x-shifted suite — loadavg alone is not a contention signal.
-    // A probe 3x over its quiet baseline must flip noisy...
-    assert(Bench.noisyHost(loadavg = 2.78, probeMs = 4 * Bench.QuietProbeMs))
-    assert(!Bench.noisyHost(loadavg = 2.78, probeMs = Bench.QuietProbeMs))
-    // ...and loadavg still fires on its own
-    assert(Bench.noisyHost(loadavg = 5.0, probeMs = Bench.QuietProbeMs))
-    // noisy suppresses the regression gate end to end
-    val cur = flat(1.0).map { case ("d", _) => "d" -> 7.5; case kv => kv }
-    val noisy = Bench.noisyHost(2.78, 4 * Bench.QuietProbeMs)
-    assert(Bench.regressedLanes(prev, cur, noisy = noisy,
-      sameSf = true).isEmpty)
-    // the probe itself runs and returns a plausible figure (smoke —
-    // an unJITed or dead-code-eliminated loop would return ~0)
-    val ms = Bench.calibrationProbeMs()
-    assert(ms > 1.0 && ms < 60000.0, s"probe measured $ms ms")
+  private def mapJson(m: Seq[(String, Double)]): String =
+    m.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+
+  /** A previous artifact on disk, as `Bench` reads it back. */
+  private def artifact(fields: (String, String)*): String = {
+    val f = java.io.File.createTempFile("bench-prev", ".json")
+    f.deleteOnExit()
+    java.nio.file.Files.write(f.toPath, fields
+      .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+      .getBytes("UTF-8"))
+    f.getPath
   }
 
-  test("parallel probe arm: single-thread-quiet + loaded-parallel " +
-      "forces noisy (the r13 detector gap — bandwidth contention)") {
-    // r13's final run: single-thread probe 393.6 ms vs 383.5 baseline
-    // (quiet) at loadavg 3.60 while the 32-thread suite shifted ~1.2x.
-    // A parallel arm 1.4x over ITS baseline must flip noisy even when
-    // the single-thread arm and loadavg both read quiet.
-    assert(Bench.noisyHost(loadavg = 3.60, probeMs = 393.6,
-      quietProbeMs = 383.5, probeParMs = 900.0, quietParMs = 600.0))
-    assert(!Bench.noisyHost(loadavg = 3.60, probeMs = 393.6,
-      quietProbeMs = 383.5, probeParMs = 650.0, quietParMs = 600.0))
-    // first run on a host (no par history): the arm is disabled, the
-    // run is its own baseline — never permanently noisy
-    assert(!Bench.noisyHost(loadavg = 1.0, probeMs = 340.0,
-      quietProbeMs = 340.0, probeParMs = 5000.0, quietParMs = 0.0))
-    // smoke: the parallel probe runs and returns a plausible figure
-    val ms = Bench.calibrationProbeParMs(threads = 4)
-    assert(ms > 1.0 && ms < 120000.0, s"par probe measured $ms ms")
+  private val sfDir = "/data/sf0.1"
+
+  test("cpu gate: a planted CPU regression in the cpu map is flagged") {
+    val (prevJson, prevCpu, prevSf) = Bench.readPrev(artifact(
+      "queries" -> mapJson(flat(0.5)), "cpu" -> mapJson(flat(1.0)),
+      "sf" -> ("\"" + sfDir + "\"")))
+    assert(prevCpu == prev && prevSf == sfDir)
+    // the gate's baseline is the cpu map, and it rides the new file
+    assert(new com.fasterxml.jackson.databind.ObjectMapper().readTree(prevJson)
+      .get("d").asDouble == 3.0)
+    val planted = flat(1.0).map { case ("d", _) => "d" -> 6.5; case kv => kv }
+    assert(Bench.regressedLanes(prevCpu, planted,
+      sameSf = prevSf == sfDir) == Seq("d"))
   }
 
-  test("probe baseline is host-keyed and aged: a window min, not a " +
-      "forever min (r13 ADVICE + item 8)") {
-    // rolling window keeps the last ProbeHistLen readings: a stale
-    // fast minimum from >K runs ago decays out instead of marking a
-    // legitimately slower box permanently noisy
-    val fastPast = Seq(200.0) ++ Seq.fill(Bench.ProbeHistLen - 1)(400.0)
-    val aged = Bench.probeWindow(410.0, fastPast)
-    assert(aged.size == Bench.ProbeHistLen)
-    assert(!aged.contains(200.0), s"stale min survived: $aged")
-    assert(Bench.quietBaseline(aged) == 400.0)
-    // within the window the min still rules
-    val recent = Bench.probeWindow(500.0, Seq(340.0, 360.0))
-    assert(Bench.quietBaseline(recent) == 340.0)
-    // first run: its own baseline — probe arm can't fire
-    val first = Bench.probeWindow(1100.0, Seq.empty)
-    assert(Bench.quietBaseline(first) == 1100.0)
-    assert(!Bench.noisyHost(1.0, 1100.0, Bench.quietBaseline(first)))
-    // garbage prev readings (<= 0, corrupted artifact) are dropped
-    assert(Bench.probeWindow(400.0, Seq(-1.0, 0.0)) == Seq(400.0))
+  test("cpu gate: a wall-only slowdown (queries x3, cpu flat) is not " +
+      "flagged") {
+    val (_, prevCpu, prevSf) = Bench.readPrev(artifact(
+      "queries" -> mapJson(flat(1.0)), "cpu" -> mapJson(flat(1.0)),
+      "sf" -> ("\"" + sfDir + "\"")))
+    // a busy host stretched lane d's wall seconds 3x: the wall-clock
+    // rule would flag it, the cpu rule reads d's flat CPU seconds
+    val wall = flat(1.0).map { case ("d", t) => "d" -> 3 * t; case kv => kv }
+    assert(Bench.regressedLanes(prev, wall, sameSf = true) == Seq("d"))
+    assert(Bench.regressedLanes(prevCpu, flat(1.0),
+      sameSf = prevSf == sfDir).isEmpty)
+    assert(Bench.medianShift(prevCpu, flat(1.0)) == 1.0)
   }
 
-  test("probe history from a different core count is discarded") {
-    def keep(host: Option[String], cores: Option[Int], ver: Option[Int]) =
-      Bench.keepProbeHistory(host, cores, ver, host = "vm", cores = 4)
-    val ver = Some(Bench.ProbeVersion)
-    assert(keep(Some("vm"), Some(4), ver))
-    // same host name, wider box: its faster baseline must not carry over
-    assert(!keep(Some("vm"), Some(32), ver))
-    // artifacts predating probe_cores carry no key
-    assert(!keep(Some("vm"), None, ver))
-    assert(!keep(Some("other"), Some(4), ver))
-    assert(!keep(Some("vm"), Some(4), Some(Bench.ProbeVersion - 1)))
+  test("cpu gate: a previous artifact with no cpu map flags nothing") {
+    // written before the cpu map existed: a queries map only
+    val old = artifact("queries" -> mapJson(flat(1.0)),
+      "sf" -> ("\"" + sfDir + "\""))
+    val (prevJson, prevCpu, prevSf) = Bench.readPrev(old)
+    assert(prevJson == "{}" && prevCpu.isEmpty && prevSf == sfDir)
+    val planted = flat(1.0).map { case ("d", _) => "d" -> 9.0; case kv => kv }
+    assert(Bench.regressedLanes(prevCpu, planted, sameSf = true).isEmpty)
+    // no artifact at all, or an unparseable one, reads the same way
+    assert(Bench.readPrev(old + ".missing") == (("{}", Map.empty, "")))
+    assert(Bench.readPrev(artifact("cpu" -> "{")) == (("{}", Map.empty, "")))
   }
 
   test("confirmation pass: a mid-suite transient stall clears on the " +
