@@ -217,10 +217,10 @@ object Bench {
     * whose suite-median-normalized CPU seconds clear [[clearsGate]],
     * only against a prev run at the SAME sf dir (a 100× prev would
     * flag everything). CPU time, not wall time: waiting for a core on a
-    * busy host stretches a lane's wall seconds, not its CPU seconds (the
-    * perfbench workloads' CPU time spread 0.05–0.08 between runs of one
-    * commit, their wall-clock 0.26–0.52). Failed lanes (-1) never enter
-    * either side, and an empty prev (no `cpu` map yet) flags nothing.
+    * busy host stretches a lane's wall seconds, not its CPU seconds (a
+    * host that slows execution itself moves both: ROADMAP item 9).
+    * Failed lanes (-1) never enter either side, and an empty prev (no
+    * `cpu` map yet) flags nothing.
     */
   private[graft] def regressedLanes(prev: Map[String, Double],
       cur: Seq[(String, Double)], sameSf: Boolean): Seq[String] =
@@ -251,6 +251,24 @@ object Bench {
       t < 0 || prev.get(name).exists(clearsGate(_, t, shift))
     }
     (confirmed.sorted, transient.sorted)
+  }
+
+  /** A run's CPU seconds as the gate reads them: -1 if it failed. */
+  private def cpuOf(r: LaneRunner.Run): Double =
+    if (r.failure.isDefined) -1.0 else r.cpuSeconds
+
+  /** The gate end to end over each lane's best run: the suite shift,
+    * then the confirmed and transient lanes after `reTime`, all taken
+    * over CPU seconds, never over the wall `seconds`.
+    */
+  private[graft] def judge(prevCpu: Map[String, Double], sameSf: Boolean,
+      lanes: Seq[(String, LaneRunner.Run)], reTime: String => LaneRunner.Run)
+      : (Double, Seq[String], Seq[String]) = {
+    val cpu = lanes.map { case (n, r) => n -> cpuOf(r) }
+    val shift = medianShift(prevCpu, cpu)
+    val (regressed, transient) = confirmRegressions(
+      regressedLanes(prevCpu, cpu, sameSf), prevCpu, shift, n => cpuOf(reTime(n)))
+    (shift, regressed, transient)
   }
 
   /** The full-map artifact a run at `sfDir` writes and reads its
@@ -382,15 +400,15 @@ object Bench {
           s"[bench] FAILED $name: ${t.getClass.getName}: ${t.getMessage}"))
         (r, m.detach())
       }
-      val Seq(cold, warm) = runs.map(_._2)
-      def best(f: LaneRunner.Run => Double): Double =
-        if (runs.exists(_._1.failure.isDefined)) -1.0 else runs.map(r => f(r._1)).min
-      (name, best(_.seconds), best(_.cpuSeconds),
-        warm.copy(compiles = cold.compiles ++ warm.compiles),
-        runs.exists(_._1.leaked.nonEmpty))
+      val (rs, Seq(cold, warm)) = runs.unzip
+      (name, LaneRunner.Run(rs.map(_.seconds).min, rs.map(_.cpuSeconds).min,
+          rs.flatMap(_.failure).headOption, rs.flatMap(_.leaked)),
+        warm.copy(compiles = cold.compiles ++ warm.compiles))
     }
-    val results = laneRuns.map(r => r._1 -> r._2)
-    val cpu = laneRuns.map(r => r._1 -> r._3)
+    val best = laneRuns.map(r => r._1 -> r._2)
+    val results = best.map { case (n, r) =>
+      n -> (if (r.failure.isDefined) -1.0 else r.seconds) }
+    val cpu = best.map { case (n, r) => n -> cpuOf(r) }
     def fmt(v: Double, dec: Int): String =
       String.format(java.util.Locale.ROOT, s"%.${dec}f", Double.box(v))
     def queriesJson(rs: Seq[(String, Double)], dec: Int): String =
@@ -409,7 +427,7 @@ object Bench {
       case (n, v) if v >= 0 && !quadraticContract(n) => v
     }.sum + failed.count(!quadraticContract(_)) * 1000.0 + buildSec
     val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val leakedJson = laneRuns.filter(_._5).map("\"" + _._1 + "\"")
+    val leakedJson = best.filter(_._2.leaked.nonEmpty).map("\"" + _._1 + "\"")
       .mkString("[", ",", "]")
     // two streaming throughput figures next to the batch seconds — the
     // reference's actual modality is an unbounded stream; the windowed
@@ -429,16 +447,11 @@ object Bench {
     // only — one machine-readable field instead of an artifact diff.
     // median_shift ships so a uniform envelope is readable off the
     // artifact without hand adjudication.
-    val shift = medianShift(prevCpu, cpu)
-    val candidates = regressedLanes(prevCpu, cpu, sameSf = prevSf == sfDir)
     // confirmation pass: candidates re-time once, AFTER the suite and
     // the two streaming lanes (see confirmRegressions)
-    val (regressed, transientLanes) =
-      confirmRegressions(candidates, prevCpu, shift, name =>
-        selected.get(name).map { fn =>
-          val r = LaneRunner.run(spark, sfDir, fn)(run)
-          if (r.failure.isDefined) -1.0 else r.cpuSeconds
-        }.getOrElse(-1.0))
+    val (shift, regressed, transientLanes) = judge(prevCpu,
+      sameSf = prevSf == sfDir, best,
+      name => LaneRunner.run(spark, sfDir, selected(name))(run))
     // a flagged ann_hnsw* re-time above rebuilds the lane memo; drop it
     graft.operators.Hnsw.releaseGraphCache(spark)
     val regressedJson = regressed.map("\"" + _ + "\"")
@@ -461,7 +474,7 @@ object Bench {
     // the headline set ever outgrow the tail budget, drop precision
     // rather than ship another unparseable round.
     val fullLine = line(queriesJson(results, 4),
-      s""","cpu":${queriesJson(cpu, 4)},"metrics":${metricsJson(hnswBuildMetrics ++ laneRuns.map(r => r._1 -> r._4))},"cores":$cpus,"prev":$prevJson""")
+      s""","cpu":${queriesJson(cpu, 4)},"metrics":${metricsJson(hnswBuildMetrics ++ laneRuns.map(r => r._1 -> r._3))},"cores":$cpus,"prev":$prevJson""")
     try java.nio.file.Files.write(java.nio.file.Paths.get(artifact),
       (fullLine + "\n").getBytes("UTF-8"))
     catch { case _: Throwable => () }

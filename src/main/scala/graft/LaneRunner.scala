@@ -14,30 +14,39 @@ import graft.operators.{Hnsw, Materialize}
 private[graft] object LaneRunner {
   type Lane = (SparkSession, String) => DataFrame
 
-  /** One run: seconds to build and consume the result, the JVM's
-    * process CPU seconds over the same interval, the failure if it
+  /** One run: seconds to build and consume the result, the CPU seconds
+    * the JVM's threads spent over the same interval, the failure if it
     * threw, and the RDDs it leaked (`id name`). Lanes run one at a time
-    * in one local-mode JVM, so `cpuSeconds` counts the driver, the tasks
-    * and GC together. It leaves out time spent waiting for a core on a
-    * busy host, which `seconds` includes.
+    * in one local-mode JVM, so `cpuSeconds` counts the lane's own thread,
+    * the task threads and Spark's driver-side threads (broadcast builds,
+    * adaptive stages). It leaves out the garbage collector and the JIT
+    * compiler, whose CPU time does not follow the lane's work, time
+    * spent waiting for a core, and a thread that ended inside the run.
     */
   final case class Run(seconds: Double, cpuSeconds: Double,
       failure: Option[Throwable], leaked: Seq[String])
 
-  private val os = java.lang.management.ManagementFactory
-    .getOperatingSystemMXBean.asInstanceOf[com.sun.management.OperatingSystemMXBean]
+  private val threads = java.lang.management.ManagementFactory.getThreadMXBean
+
+  /** CPU nanoseconds so far of each live thread, by id (never reused).
+    * HotSpot lists no GC or JIT compiler thread here.
+    */
+  private def threadCpuNanos(): Map[Long, Long] =
+    threads.getAllThreadIds.iterator
+      .map(id => id -> threads.getThreadCpuTime(id)).filter(_._2 >= 0).toMap
 
   def run(spark: SparkSession, dir: String, lane: Lane)(
       consume: DataFrame => Unit): Run = {
     val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
     val t0 = System.nanoTime()
-    val c0 = os.getProcessCpuTime
+    val c0 = threadCpuNanos()
     var result: Option[DataFrame] = None
     val failure =
       try { result = Some(lane(spark, dir)); consume(result.get); None }
       catch { case t: Throwable => Some(t) }
     val seconds = (System.nanoTime() - t0) / 1e9
-    val cpuSeconds = (os.getProcessCpuTime - c0) / 1e9
+    val cpuSeconds = threadCpuNanos().iterator
+      .map { case (id, t) => t - c0.getOrElse(id, 0L) }.sum / 1e9
     Run(seconds, cpuSeconds, failure, Materialize.settle(spark, before, result))
   }
 

@@ -2,7 +2,7 @@ package graft.tools
 
 /** Dev-loop per-run timer: run named SparkEntry queries N times each
   * through the noop sink and print EVERY run's wall seconds and, after
-  * a `/`, its process CPU seconds (Bench keeps only the min — the
+  * a `/`, its threads' CPU seconds (Bench keeps only the min — the
   * distribution is what tells contention from real cost: waiting for a
   * core on a busy host stretches the wall figure, not the CPU one),
   * plus one `QM <query> {…}` line per run with the run's

@@ -105,18 +105,34 @@ class BenchSpec extends AnyFunSuite {
       sameSf = prevSf == sfDir) == Seq("d"))
   }
 
+  private def lanes(wall: Double, cpu: Double): Seq[(String, LaneRunner.Run)] =
+    prev.toSeq.sortBy(_._1).map { case (k, v) =>
+      k -> LaneRunner.Run(v * wall, v * cpu, None, Nil) }
+
   test("cpu gate: a wall-only slowdown (queries x3, cpu flat) is not " +
       "flagged") {
-    val (_, prevCpu, prevSf) = Bench.readPrev(artifact(
-      "queries" -> mapJson(flat(1.0)), "cpu" -> mapJson(flat(1.0)),
-      "sf" -> ("\"" + sfDir + "\"")))
-    // a busy host stretched lane d's wall seconds 3x: the wall-clock
-    // rule would flag it, the cpu rule reads d's flat CPU seconds
-    val wall = flat(1.0).map { case ("d", t) => "d" -> 3 * t; case kv => kv }
-    assert(Bench.regressedLanes(prev, wall, sameSf = true) == Seq("d"))
-    assert(Bench.regressedLanes(prevCpu, flat(1.0),
-      sameSf = prevSf == sfDir).isEmpty)
-    assert(Bench.medianShift(prevCpu, flat(1.0)) == 1.0)
+    def judge(cur: Seq[(String, LaneRunner.Run)]) = {
+      val byName = cur.toMap
+      Bench.judge(prev, sameSf = true, cur, byName)
+    }
+    // a busy host stretched lane d's wall seconds 3x, its CPU seconds
+    // stayed put: the gate reads the CPU seconds of the lane's runs
+    // and of its re-time
+    val wall = lanes(1.0, 1.0).map {
+      case ("d", r) => "d" -> r.copy(seconds = 3 * r.seconds); case kv => kv }
+    assert(judge(wall) == ((1.0, Nil, Nil)))
+    // the same lane with its CPU seconds x3 and its wall flat is flagged
+    val cpu = lanes(1.0, 1.0).map {
+      case ("d", r) => "d" -> r.copy(cpuSeconds = 3 * r.cpuSeconds); case kv => kv }
+    assert(judge(cpu) == ((1.0, Seq("d"), Nil)))
+    // the median shift is taken over CPU seconds too: a suite whose wall
+    // doubled while CPU did not shifts by 1
+    assert(judge(lanes(2.0, 1.0))._1 == 1.0)
+    assert(judge(lanes(1.0, 2.0))._1 == 2.0)
+    // a lane whose run failed never flags, whatever its CPU seconds
+    val failed = cpu.map {
+      case ("d", r) => "d" -> r.copy(failure = Some(new RuntimeException)); case kv => kv }
+    assert(judge(failed) == ((1.0, Nil, Nil)))
   }
 
   test("cpu gate: a previous artifact with no cpu map flags nothing") {
